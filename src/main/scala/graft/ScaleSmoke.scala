@@ -607,21 +607,20 @@ object ScaleSmoke {
         .write.parquet(bloomPath)
     val bloomBits = 1 << 23
     val tBl = System.nanoTime()
-    val bloomSide = graft.sink.Layout.writeBlooms(spark, bloomPath,
-      "l_orderkey", bits = bloomBits)
+    graft.sink.Sidecars.declare(spark, bloomPath,
+      Seq(graft.sink.Sidecars.Bloom("l_orderkey", bits = bloomBits)))
     val buildWall = (System.nanoTime() - tBl) / 1e9
     val probeKeys = Seq(100000L, 2 * M + 7L, 5 * M + 123456L,
       (rep - 1L) * M + 900001L, 42L)
     val tBp = System.nanoTime()
     val (bloomDf, bKept, bTotal) = graft.sink.Layout.bloomPrunedRead(
-      spark, bloomPath, "l_orderkey", probeKeys, bits = bloomBits,
-      sidecarPath = Some(bloomSide))
+      spark, bloomPath, "l_orderkey", probeKeys, bits = bloomBits)
     val nBloom = bloomDf.filter(col("l_orderkey").isin(probeKeys: _*)).count()
     val probeWall = (System.nanoTime() - tBp) / 1e9
     val nBloomFull = spark.read.parquet(bloomPath)
       .filter(col("l_orderkey").isin(probeKeys: _*)).count()
-    val sideBytes = graft.sink.StageWriter.dirSize(
-      java.nio.file.Paths.get(bloomSide))
+    val sideBytes = java.nio.file.Files.size(
+      java.nio.file.Paths.get(bloomPath + ".__planes__"))
     println(f"[scale] bloom prune ${rep}x   $probeWall%8.2f s  " +
       f"($nBloom rows from $bKept/$bTotal files; build $buildWall%.2f s, " +
       f"sidecar ${sideBytes / 1048576.0}%.1f MB = 1 MB/file)")
@@ -811,17 +810,18 @@ object ScaleSmoke {
 
     // ---- distributed counts rebuild (r14) ------------------------------
     // The INITIAL footer pass over a multi-million-file table must not
-    // serialize on the driver: writeCountsDistributed parallelizes the
-    // file list and returns only sidecar lines. Pin that (a) it runs as
-    // a real Spark job — not a driver loop — and (b) the sidecar is
-    // byte-identical to the serial builder's.
-    val countsSidecar = java.nio.file.Paths.get(metaPath + ".__counts__")
-    val serialCountBytes = java.nio.file.Files.readAllBytes(countsSidecar)
+    // serialize on the driver: distributedCounts parallelizes the
+    // file list and returns only (file, count) pairs. Pin that (a) it
+    // runs as a real Spark job — not a driver loop — and (b) its counts
+    // equal the serial footer pass the counts plane holds.
+    val serialCounts = graft.sink.MetadataAgg.loadCounts(metaPath).get
     spark.sparkContext.setJobGroup("dist_counts",
       "distributed footer rebuild", false)
     val tDr = System.nanoTime()
-    try graft.sink.MetadataAgg.writeCountsDistributed(spark, metaPath)
-    finally spark.sparkContext.clearJobGroup()
+    val distCounts =
+      try graft.sink.MetadataAgg.distributedCounts(spark,
+        graft.sink.MetadataAgg.listRel(java.nio.file.Paths.get(metaPath)))
+      finally spark.sparkContext.clearJobGroup()
     val drWall = (System.nanoTime() - tDr) / 1e9
     val drDeadline = System.nanoTime + 30L * 1000 * 1000 * 1000
     while (spark.sparkContext.statusTracker
@@ -833,9 +833,8 @@ object ScaleSmoke {
     assert(spark.sparkContext.statusTracker
       .getJobIdsForGroup("dist_counts").nonEmpty,
       "the full counts rebuild must run as a distributed job")
-    assert(java.util.Arrays.equals(serialCountBytes,
-      java.nio.file.Files.readAllBytes(countsSidecar)),
-      "distributed and serial rebuilds must write identical sidecars")
+    assert(distCounts == serialCounts,
+      "distributed and serial footer passes must agree")
 
     // ---- incremental compaction (D230) at replicated scale ------------
     // 64 right-sized files + 64 appended stragglers: compactSmall must

@@ -9,24 +9,27 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   InMemoryFileIndex, LogicalRelation}
 
-import graft.sink.StageWriter
+import graft.sink.Sidecars
 
-/** Optimizer rule: AUTOMATIC stats-sidecar file pruning (the D107
-  * manifest applied transparently, the way Delta's log stats prune every
-  * query without the reader asking). `Layout.prunedRead` requires the
-  * caller to opt in per query; this rule gives every plain
-  * `spark.read.parquet(path).filter(key ...)` over a sidecar-carrying
-  * table the same skip, for equality and range predicates on the stats
-  * column.
+/** Optimizer rule: AUTOMATIC bounds-plane file pruning (the D107
+  * manifest and the D183 zone map applied transparently, the way
+  * Delta's log stats prune every query without the reader asking).
+  * `Layout.prunedRead` requires the caller to opt in per query; this
+  * rule gives every plain `spark.read.parquet(path).filter(...)` over a
+  * table with a declared bounds plane ([[graft.sink.Sidecars]]'s `Stats`
+  * and `Zone` columns, long or string kind) the skip, for equality and
+  * range predicates: a file survives only if EVERY constrained bounds
+  * column admits it.
   *
   * Safety: the ORIGINAL Filter always remains above the pruned scan
-  * (file skipping is file-granular; rows still filter), and pruning only
+  * (file skipping is file-granular; rows still filter); pruning only
   * fires when the sidecar's file inventory matches the directory EXACTLY
-  * (`StageWriter.loadStats`) — a stale or foreign sidecar disables the
-  * rule rather than mis-pruning. Partitioned layouts have no flat
-  * sidecar and pass through. Idempotent by construction: a pruned
-  * relation's root paths are data FILES, whose directory listing no
-  * longer validates, so the rule never re-fires on its own output.
+  * (`Sidecars.load`) — a stale or foreign sidecar disables the rule
+  * rather than mis-pruning; strict bounds relax to inclusive, non-ASCII
+  * string bounds/literals stand down, no bound → no pruning.
+  * Partitioned layouts pass through. Idempotent by construction: a
+  * pruned relation's root paths are data FILES, whose directory listing
+  * no longer validates, so the rule never re-fires on its own output.
   *
   * Register via `spark.experimental.extraOptimizations` or
   * [[GraftExtensions]] (`injectOptimizerRule`). */
@@ -35,66 +38,56 @@ class StatsFilePrune extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, lr: LogicalRelation)
         if lr.relation.isInstanceOf[HadoopFsRelation] =>
-      prune(f, cond, lr, lr.relation.asInstanceOf[HadoopFsRelation])
+      prune(cond, lr, lr.relation.asInstanceOf[HadoopFsRelation])
         .getOrElse(f)
   }
 
-  private def prune(f: Filter, cond: Expression, lr: LogicalRelation,
+  private def ascii(s: String) = s.forall(_ < 128)
+
+  private def prune(cond: Expression, lr: LogicalRelation,
       rel: HadoopFsRelation): Option[Filter] = {
     val roots = rel.location.rootPaths
-    if (roots.size != 1) return None
+    if (roots.size != 1 || rel.partitionSchema.nonEmpty) return None
     val dir = roots.head.toUri.getPath
     if (!java.nio.file.Files.isDirectory(Paths.get(dir))) return None
-    val (column, kind) = StageWriter.statsHeader(dir).getOrElse(return None)
-    val files = StageWriter.listDataFiles(Paths.get(dir))
-    // keep-decision per dialect; both relax strict bounds to inclusive
-    // (over-keeping is always safe — the original Filter stays above)
-    val keepFile: String => Boolean = kind match {
-      case "long" =>
-        val (lo, hi) = StatsFilePrune.extractBounds(cond, column)
-          .getOrElse(return None)
-        val stats = StageWriter.loadStats(dir, files, column)
-          .getOrElse(return None)
-        name => stats.get(name).flatten match {
-          case Some((mn, mx)) => !(mx < lo || mn > hi)
-          case None => false // no non-null keys — cannot match
-        }
-      case _ =>
-        val (lo, hi) = StatsFilePrune.extractBoundsStr(cond, column)
-          .getOrElse(return None)
-        val stats = StageWriter.loadStatsStr(dir, files, column)
-          .getOrElse(return None)
-        // ASCII-only guard: driver-side String ordering must agree with
-        // Spark's UTF8 byte ordering, which holds for ASCII; anything
-        // else stands down rather than risking a wrong prune
-        val ascii = (s: String) => s.forall(_ < 128)
-        if (!(lo.toSeq ++ hi.toSeq).forall(ascii)) return None
-        name => stats.get(name).flatten match {
-          case Some((mn, mx)) =>
-            if (!ascii(mn) || !ascii(mx)) true // opaque bounds: keep
-            else !(lo.exists(mx < _) || hi.exists(mn > _))
-          case None => false
-        }
-    }
-    val keep = files.filter(p => keepFile(p.getFileName.toString))
+    val planes = Sidecars.load(dir).getOrElse(return None)
+    // per bounds column: does the file admit the predicate's bound, if
+    // the predicate has one (None = no non-null values, cannot match)
+    val admits: Seq[String => Boolean] =
+      planes.boundsColumns.flatMap { case (c, kind) =>
+        val b = planes.bounds(c).get._2
+        if (kind == "long")
+          StatsFilePrune.extractBounds(cond, c).map { case (lo, hi) =>
+            (name: String) => b(name).exists { case (mn, mx) =>
+              !(mx.toLong < lo || mn.toLong > hi) }
+          }
+        else
+          StatsFilePrune.extractBoundsStr(cond, c)
+            .filter { case (lo, hi) => (lo.toSeq ++ hi.toSeq).forall(ascii) }
+            .map { case (lo, hi) =>
+              (name: String) => b(name).exists { case (mn, mx) =>
+                !ascii(mn) || !ascii(mx) || // opaque bounds: keep
+                  !(lo.exists(mx < _) || hi.exists(mn > _)) }
+            }
+      }
+    if (admits.isEmpty) return None
+    val files = planes.files.toSeq.sorted
+    val keep = files.filter(n => admits.forall(_(n)))
     if (keep.size >= files.size) return None
-    val sparkSession = rel.sparkSession
-    val idx = new InMemoryFileIndex(sparkSession,
-      keep.map(p => new Path(p.toUri)), Map.empty,
+    val spark = rel.sparkSession
+    val idx = new InMemoryFileIndex(spark,
+      keep.map(n => new Path(Paths.get(dir, n).toUri)), Map.empty,
       Some(rel.dataSchema))
-    Some(Filter(cond,
-      lr.copy(relation =
-        rel.copy(location = idx)(sparkSession))))
+    Some(Filter(cond, lr.copy(relation = rel.copy(location = idx)(spark))))
   }
-
 }
 
 object StatsFilePrune {
 
   /** Conjunctive [lo, hi] bounds on `column` from =, <, <=, >, >=,
     * literal on either side. None when no conjunct constrains the
-    * column (no bound → no pruning — never guess). Shared by the stats
-    * sidecar rule and [[DerivedPartitionPrune]]. */
+    * column (no bound → no pruning — never guess). Shared by the bounds
+    * plane rule and [[DerivedPartitionPrune]]. */
   private[plans] def extractBounds(cond: Expression,
       column: String): Option[(Long, Long)] = {
     def lit(e: Expression): Option[Long] = e match {

@@ -1,87 +1,13 @@
 package graft.plans
 
-import java.nio.file.Paths
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  InMemoryFileIndex, LogicalRelation}
 
-import graft.sink.{StageWriter, ZoneMap}
-
-/** Optimizer rule: MULTI-COLUMN zone-map pruning (D183). Where
-  * [[StatsFilePrune]] skips on the one merge-key sidecar, this consults
-  * the `__zonemap__` (several columns, long or string) and drops a file
-  * when ANY mapped, predicate-constrained column excludes it — the full
-  * Delta data-skipping shape, and the automatic read-side payoff of a
-  * Hilbert/Z layout (both clustered columns skip, the reader asks for
-  * neither). Same safety posture as every pruning rule here: the
-  * original Filter stays above the narrowed scan, inventory-exact map
-  * validation, strict bounds relaxed to inclusive, non-ASCII string
-  * bounds/literals stand down, no bound → no pruning. */
-class ZoneMapPrune extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case f @ Filter(cond, lr: LogicalRelation)
-        if lr.relation.isInstanceOf[HadoopFsRelation] =>
-      prune(cond, lr, lr.relation.asInstanceOf[HadoopFsRelation])
-        .getOrElse(f)
-  }
-
-  private def ascii(s: String) = s.forall(_ < 128)
-
-  private def prune(cond: Expression, lr: LogicalRelation,
-      rel: HadoopFsRelation): Option[Filter] = {
-    val roots = rel.location.rootPaths
-    if (roots.size != 1) return None
-    val dir = roots.head.toUri.getPath
-    if (!java.nio.file.Files.isDirectory(Paths.get(dir))) return None
-    val files = StageWriter.listDataFiles(Paths.get(dir))
-    val zones = ZoneMap.load(dir, files).getOrElse(return None)
-    // per mapped column: the conjunctive bound, if the predicate has one
-    val colBounds: Seq[(String, String => Boolean)] =
-      zones.kinds.toSeq.flatMap { case (c, kind) =>
-        if (kind == "long")
-          StatsFilePrune.extractBounds(cond, c).map { case (lo, hi) =>
-            c -> ((name: String) =>
-              zones.bounds.get((name, c)).flatten match {
-                case Some((mn, mx)) =>
-                  !(mx.toLong < lo || mn.toLong > hi)
-                case None => false // no non-null values — cannot match
-              })
-          }
-        else
-          StatsFilePrune.extractBoundsStr(cond, c).flatMap {
-            case (lo, hi) =>
-              if (!(lo.toSeq ++ hi.toSeq).forall(ascii)) None
-              else Some(c -> ((name: String) =>
-                zones.bounds.get((name, c)).flatten match {
-                  case Some((mn, mx)) =>
-                    if (!ascii(mn) || !ascii(mx)) true // opaque: keep
-                    else !(lo.exists(mx < _) || hi.exists(mn > _))
-                  case None => false
-                }))
-          }
-      }
-    if (colBounds.isEmpty) return None
-    // a file survives only if EVERY constrained column admits it
-    val keep = files.filter { p =>
-      val n = p.getFileName.toString
-      colBounds.forall { case (_, admits) => admits(n) }
-    }
-    if (keep.size >= files.size) return None
-    val spark: SparkSession = rel.sparkSession
-    val idx = new InMemoryFileIndex(spark,
-      keep.map(p => new Path(p.toUri)), Map.empty, Some(rel.dataSchema))
-    Some(Filter(cond, lr.copy(relation =
-      rel.copy(location = idx)(spark))))
-  }
-}
-
+/** D183 zone-map pruning. `Zone` columns are columns of the table's one
+  * bounds plane, and [[StatsFilePrune]] prunes on every column of that
+  * plane — a filter over a stats AND a zone column must be narrowed by
+  * both at once, which one rule does and two rules in one batch do not.
+  * This alias keeps the install calls of zone-map users working. */
 object ZoneMapPrune {
   def ensureInstalled(spark: SparkSession): Unit =
-    RuleInstall.ensure(spark)(_.isInstanceOf[ZoneMapPrune], new ZoneMapPrune)
+    StatsFilePrune.ensureInstalled(spark)
 }

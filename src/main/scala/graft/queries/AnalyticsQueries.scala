@@ -1572,10 +1572,9 @@ object AnalyticsQueries {
           "markers + sweep must land every event exactly once")
         if (!Q.benchLean) {
           // the plane stayed fresh through appends, sweeps and replays
-          val files = graft.sink.StageWriter.listDataFiles(
-            java.nio.file.Paths.get(target))
-          require(graft.sink.StageWriter.loadStats(target, files,
-            "event_id").isDefined, "stats plane must be fresh")
+          require(graft.sink.Sidecars.load(target)
+            .exists(_.bounds("event_id").isDefined),
+            "stats plane must be fresh")
         }
         landed.agg(count(lit(1)).as("n"),
             count_distinct(col("event_id")).as("n_ids"),

@@ -773,7 +773,7 @@ object BenchQueries {
       FROM events WHERE event_type = 'click'"""))),
 
     // D123 — per-file BLOOM sidecar point-lookup pruning
-    // (Layout.writeBlooms/bloomPrunedRead): orders is written clustered by
+    // (Sidecars.Bloom/bloomPrunedRead): orders is written clustered by
     // o_custkey, so every file's o_orderkey [min, max] straddles any probe
     // — the D107 range manifest prunes NOTHING for a point lookup on the
     // non-layout key. The persisted per-file Bloom sidecar (k hashed bit
@@ -800,12 +800,11 @@ object BenchQueries {
         val nRows = load(spark, dir, "orders").count()
         val bloomBits = math.min(1L << 24,
           math.max(1L << 17, java.lang.Long.highestOneBit(nRows * 2))).toInt
-        val sidecar = graft.sink.Layout.writeBlooms(spark, p, "o_orderkey",
-          bits = bloomBits)
+        graft.sink.Sidecars.declare(spark, p,
+          Seq(graft.sink.Sidecars.Bloom("o_orderkey", bits = bloomBits)))
         val keys = Seq(11L, 4000L, 7777L, 9988L, 14000L)
         val (pruned, read, total) = graft.sink.Layout.bloomPrunedRead(
-          spark, p, "o_orderkey", keys, bits = bloomBits,
-          sidecarPath = Some(sidecar))
+          spark, p, "o_orderkey", keys, bits = bloomBits)
         require(read <= total / 3 && total >= 16,
           s"bloom pruning ineffective: read $read of $total files")
         pruned.filter(col("o_orderkey").isin(keys: _*))

@@ -1448,7 +1448,7 @@ object MaintenanceQueries {
              round(quantile_cont(v, 0.75), 4) AS p75
       FROM r WHERE rn <= 1024"""))),
 
-    // D183 — multi-column zone map + automatic pruning (sink.ZoneMap +
+    // D183 — multi-column zone map + automatic pruning (Sidecars.Zone +
     // plans.ZoneMapPrune): the read-side payoff of the D168 Hilbert
     // layout — BOTH clustered columns skip files on plain filters, the
     // reader asks for neither. The gate clusters on (x, y), writes one
@@ -1464,7 +1464,8 @@ object MaintenanceQueries {
               pmod(col("l_orderkey"), lit(1024)).cast("long").as("x"),
               pmod(col("l_partkey"), lit(1024)).cast("long").as("y")),
           path, "x", "y", bits = 10, numFiles = 32)
-        graft.sink.ZoneMap.write(spark, path, Seq("x", "y"))
+        graft.sink.Sidecars.declare(spark, path,
+          Seq(graft.sink.Sidecars.Zone(Seq("x", "y"))))
         graft.plans.ZoneMapPrune.ensureInstalled(spark)
         def scanned(df: org.apache.spark.sql.DataFrame) =
           df.queryExecution.optimizedPlan.collect {
@@ -1547,7 +1548,8 @@ object MaintenanceQueries {
           .write.parquet(path)
         // ONE zone-map scan sets up the pruning substrate (a byte-sized
         // re-compaction here would dominate the gate at 20x for nothing)
-        graft.sink.ZoneMap.write(spark, path, Seq("l_orderkey"))
+        graft.sink.Sidecars.declare(spark, path,
+          Seq(graft.sink.Sidecars.Zone(Seq("l_orderkey"))))
         graft.plans.ZoneMapPrune.ensureInstalled(spark)
         val full = spark.read.parquet(path)
         val pruned = spark.read.parquet(path)
@@ -1961,16 +1963,15 @@ object MaintenanceQueries {
             .filter(col("ok_bucket") === 2L))
           require(zoned < total,
             s"$tag: zone-map pruning inactive ($zoned of $total)")
-          // the bloom sidecar must be inventory-EXACT (bloomPrunedRead
+          // the bloom plane must be inventory-EXACT (bloomPrunedRead
           // would otherwise rebuild in-query — a hidden full scan)...
-          val have = spark.read.parquet(path + ".__blooms__")
-            .select("file").as[String].collect()
-            .map(_.split('/').last).toSet
-          require(have == names.toSet, s"$tag: bloom sidecar stale")
+          val have = graft.sink.Sidecars.load(path).flatMap(_.of(
+            graft.sink.Sidecars.Bloom("uid", bits = bloomBits)))
+          require(have.exists(_.keySet == names.toSet),
+            s"$tag: bloom plane stale")
           // ...and actually skip files on a point probe
           val (_, bRead, bTotal) = graft.sink.Layout.bloomPrunedRead(
-            spark, path, "uid", Seq(probeKey), bits = bloomBits,
-            sidecarPath = Some(path + ".__blooms__"))
+            spark, path, "uid", Seq(probeKey), bits = bloomBits)
           require(bRead < bTotal,
             s"$tag: bloom pruning inactive ($bRead of $bTotal)")
         }
@@ -2030,7 +2031,7 @@ object MaintenanceQueries {
     // and D197 CHECKs validate the STAGED batch (violating append
     // refuses with target AND planes untouched, staging cleaned).
     "q_append_incremental" -> (((spark, dir) => {
-      import graft.sink.{Checks, Sidecars, StageWriter, ZoneMap}
+      import graft.sink.{Checks, Sidecars, StageWriter}
       val tmp = Q.scratchDir("append_gate")
       try {
         val path = tmp.resolve("t").toString
@@ -2069,17 +2070,13 @@ object MaintenanceQueries {
           "append must leave every existing file byte-identical")
         require(after.size > before.size, "append must add files")
         // every declared plane fresh against the NEW inventory
-        val files = StageWriter.listDataFiles(
-          java.nio.file.Paths.get(path))
-        require(StageWriter.loadStats(path, files, "l_orderkey").isDefined,
-          "range stats must be patched, not stale")
-        require(ZoneMap.load(path, files).isDefined,
-          "zone map must be patched, not stale")
-        val bloomNames = spark.read.parquet(path + ".__blooms__")
-          .select("file").collect().map(_.getString(0).split('/').last)
-          .toSet
-        require(bloomNames == files.map(_.getFileName.toString).toSet,
-          "bloom sidecar must cover exactly the new inventory")
+        val planes = Sidecars.load(path)
+        require(planes.exists(_.bounds("l_orderkey").isDefined) &&
+          planes.exists(_.bounds("l_linenumber").isDefined),
+          "range stats and zone map must be patched, not stale")
+        require(planes.exists(_.of(Sidecars.Bloom("l_orderkey",
+          bits = 1 << 16)).isDefined),
+          "bloom plane must cover exactly the new inventory")
         spark.read.parquet(path)
           .filter(pmod(col("l_orderkey"), lit(11)) === 0)
           .select(col("l_orderkey"), col("l_linenumber"),

@@ -154,8 +154,9 @@ object PipelineQueries {
             s"(${before.size} files, ${untouched.size} untouched)")
         untouched.foreach(f => require(before(f) == after(f),
           s"untouched file $f changed on disk"))
-        require(StageWriter.statsColumn(t).contains("c_key"),
-          "the string-dialect stats sidecar must persist")
+        require(graft.sink.Sidecars.load(t)
+          .exists(_.bounds("c_key").exists(_._1 == "string")),
+          "the string-kind bounds plane must persist")
         spark.read.parquet(t).orderBy("c_key")
           .localCheckpoint() // materialize before the scratch dir dies
       } finally StageWriter.deleteRecursively(tmp)

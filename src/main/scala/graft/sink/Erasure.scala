@@ -27,8 +27,9 @@ object Erasure {
     * bounded-pool overlap of [[Par.map]] (guide §2.6): results come back
     * in input order; the first failure cancels outstanding snapshots and
     * propagates the ORIGINAL exception, not the pool's wrapper. */
-  private def parMap[A, B](xs: Seq[A], maxThreads: Int = 4)
-      (f: A => B): Seq[B] = Par.map(xs, maxThreads)(f)
+  private def parMap[A, B](spark: SparkSession, xs: Seq[A],
+      maxThreads: Int = 4)(f: A => B): Seq[B] =
+    Par.map(spark, xs, maxThreads)(f)
 
   /** Pseudonymized ledger append shared by both erasure surfaces: one
     * line per REQUESTED subject (no-row subjects ledger 0 — the
@@ -131,13 +132,15 @@ object Erasure {
       // pool (opt guide §2.6: actions are only sequential because the
       // driver calls them sequentially); each dir's protocol is
       // unchanged, only the idle tail between dirs goes away.
-      val deletes = parMap(dirs)(d =>
+      val deletes = parMap(spark, dirs)(d =>
         DeletionVectors.deleteKeys(spark, d, ids, keyCol))
       val perKey = deletes.map(_.perKey).reduce(_.unionByName(_))
         .groupBy(keyCol).agg(sum("rows_deleted").as("rows_erased"))
         .select(col(keyCol).as("__erase_id"), col("rows_erased"))
       writeLedger(ids, perKey, ledgerPath, ledgerKey, erasedAtMs)
-      if (fold) { parMap(dirs)(d => DeletionVectors.apply(spark, d)); () }
+      if (fold) {
+        parMap(spark, dirs)(d => DeletionVectors.apply(spark, d)); ()
+      }
       Erased(nSubjects, deletes.map(_.rowsDeleted).sum)
     } finally ids.unpersist()
   }

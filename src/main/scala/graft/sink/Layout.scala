@@ -136,13 +136,12 @@ object Layout {
   // column — the filter is a FIXED bits/8-byte bitset per file (a typed
   // OR-merge Aggregator, functions/BloomBits: map-side combinable, state
   // independent of file row count — a 4M-bit filter for a 5M-row file is
-  // 512 KB where a position-set would balloon), persisted next to the
-  // table and rebuilt only on write (like the D107 range sidecar).
-  // Survivor selection runs as a DISTRIBUTED broadcast join of the tiny
-  // probe set against the sidecar TABLE — only surviving file NAMES are
-  // ever collected, so the driver never holds the filters even at 10⁶
-  // files (unlike the range manifest, blooms are KBs-to-MBs per file —
-  // collecting them would not be log-size-class).
+  // 512 KB where a position-set would balloon), kept as a declared plane
+  // of the table's one sidecar ([[Sidecars.Bloom]]) and maintained only
+  // on write. Honest size note: a plane-served probe holds every filter
+  // on the driver (KBs per file); at 10⁶ files the in-query path's
+  // distributed broadcast join, which collects only surviving file
+  // NAMES, is the shape to keep.
   // ---------------------------------------------------------------------
 
   /** The k bit positions of one key — pure xxhash64 arithmetic, identical
@@ -155,13 +154,12 @@ object Layout {
     array((0 until k).map(i =>
       pmod(xxhash64(key.cast("string"), lit(i)), lit(bits.toLong))): _*)
 
-  /** Per-file Bloom sidecar table `(file, bitset)`: the fixed-size filter
-    * of the file's keys. ONE scan of only the key column; runs once per
-    * write (maintenance cadence), never per query. */
-  def fileBlooms(spark: org.apache.spark.sql.SparkSession, path: String,
-      column: String, bits: Int = 8192, k: Int = 3): DataFrame =
-    spark.read.parquet(path)
-      .select(input_file_name().as("file"),
+  /** Per-file Bloom table `(file, bitset)` of `df`, whose `__f` column
+    * names each row's file: the fixed-size filter of each file's keys,
+    * ONE bounded-state aggregation over the key column. */
+  private[sink] def blooms(df: DataFrame, column: String, bits: Int,
+      k: Int): DataFrame =
+    df.select(col("__f").as("file"),
         explode(bloomPositions(col(column), bits, k)).as("pos"))
       .groupBy("file")
       .agg(graft.functions.BloomBits.agg(bits)(col("pos")).as("bitset"))
@@ -172,85 +170,41 @@ object Layout {
     expr("forall(ps, p -> (element_at(bitset, CAST(p DIV 64 AS INT) + 1) " +
       "& shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))) != 0)")
 
-  /** Persist the Bloom sidecar as parquet next to the table (the write-time
-    * half; [[bloomPrunedRead]] consumes it). Returns the sidecar path. */
-  def writeBlooms(spark: org.apache.spark.sql.SparkSession, path: String,
-      column: String, bits: Int = 8192, k: Int = 3): String = {
-    val sidecar = path + ".__blooms__"
-    fileBlooms(spark, path, column, bits, k)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sidecar)
-    sidecar
-  }
-
-  /** Incremental Bloom-sidecar maintenance after a FILE-TARGETED rewrite
-    * (D190): keep the untouched files' filters, build filters for ONLY
-    * the new files (one key-column scan of them — O(new files), the
-    * targeted merge's cost shape), republish atomically. No-op without a
-    * sidecar. `bits`/`k` must match the original declaration — the
-    * manifest ([[Sidecars]]) carries them so build and probe agree. */
-  def maintainBloomsAfterRewrite(spark: org.apache.spark.sql.SparkSession,
-      path: String, removed: Set[String], added: Seq[java.nio.file.Path],
-      column: String, bits: Int = 8192, k: Int = 3): Unit = {
-    val sidecar = path + ".__blooms__"
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sidecar)))
-      return
-    val old = spark.read.parquet(sidecar)
-    val kept =
-      if (removed.isEmpty) old
-      else old.filter(!element_at(split(col("file"), "/"), -1)
-        .isin(removed.toSeq: _*)) // file NAMES, file-count-sized — never data
-    val fresh =
-      if (added.isEmpty) kept.limit(0)
-      else spark.read.parquet(added.map(_.toString): _*)
-        .select(input_file_name().as("file"),
-          explode(bloomPositions(col(column), bits, k)).as("pos"))
-        .groupBy("file")
-        .agg(graft.functions.BloomBits.agg(bits)(col("pos")).as("bitset"))
-    // materialize BEFORE overwriting the directory being read
-    val out = kept.unionByName(fresh).localCheckpoint()
-    out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sidecar)
-  }
-
   /** Point-lookup read that scans ONLY files whose Bloom filter might
-    * contain one of `keys`. Uses the persisted sidecar when `sidecarPath`
-    * is given (validated against the current file inventory — a rewrite
-    * invalidates it), else builds filters in-query. The probe runs as a
-    * broadcast join against the sidecar table and collects only the
-    * surviving file names. False positives cost an extra file scan, never
-    * a wrong row — callers still apply the exact IN filter. Returns
-    * (dataframe, filesRead, filesTotal). */
+    * contain one of `keys`. A declared `Sidecars.Bloom(column, bits, k)`
+    * plane that validates against the current inventory serves the
+    * filters — the probe then runs on the driver with ZERO Spark jobs
+    * (the probe positions are a local-relation projection, the same
+    * expressions the build used); otherwise filters are built in-query
+    * and the probe runs as a broadcast join that collects only the
+    * surviving file names. False positives cost an extra file scan,
+    * never a wrong row — callers still apply the exact IN filter.
+    * Returns (dataframe, filesRead, filesTotal). */
   def bloomPrunedRead(spark: org.apache.spark.sql.SparkSession, path: String,
-      column: String, keys: Seq[Any], bits: Int = 8192, k: Int = 3,
-      sidecarPath: Option[String] = None): (DataFrame, Int, Int) = {
+      column: String, keys: Seq[Any], bits: Int = 8192,
+      k: Int = 3): (DataFrame, Int, Int) = {
     import spark.implicits._
-    // inventory check: sidecar must cover exactly. Compared by BASENAME
-    // against the directory LISTING — an O(files) metadata call, never a
-    // data scan (part-file names are uuid-unique, the same identity the
-    // D107 stats sidecar keys on). The collected inventory doubles as
-    // the file TOTAL, so the valid-sidecar path never pays a separate
-    // count job (r15 — one job per probe instead of two).
-    val fromDisk = sidecarPath.flatMap { sp =>
-      val side = spark.read.parquet(sp)
-      val have = side.select("file").as[String].collect()
-        .map(_.split('/').last).toSet
-      val now = java.nio.file.Files.list(java.nio.file.Paths.get(path))
-        .toArray.map(_.toString.split('/').last)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-        .toSet
-      if (have == now) Some((side, have.size)) else None
-    }
-    val blooms = fromDisk.map(_._1)
-      .getOrElse(fileBlooms(spark, path, column, bits, k))
     // canonical string form on the probe side too (see bloomPositions)
     val probes = keys.map(_.toString).toDF(column)
       .select(bloomPositions(col(column), bits, k).as("ps"))
-    val keep = blooms.join(broadcast(probes), ProbeHit)
-      .select("file").distinct().as[String].collect()
-    val total = fromDisk.map(_._2)
-      .getOrElse(blooms.select("file").distinct().count().toInt)
+    val plane = Sidecars.Bloom(column, bits, k)
+    val (keep, total) = Sidecars.load(path).flatMap(_.of(plane)) match {
+      case Some(filters) =>
+        val ps = probes.collect().map(_.getSeq[Long](0))
+        val hit = filters.collect { case (f, words) if ps.exists(_.forall(p =>
+          (words((p / 64).toInt) & (1L << (p % 64))) != 0)) =>
+          java.nio.file.Paths.get(path, f).toString }
+        (hit.toSeq.sorted, filters.size)
+      case None =>
+        val blooms = this.blooms(spark.read.parquet(path)
+          .withColumn("__f", input_file_name()), column, bits, k)
+        (blooms.join(broadcast(probes), ProbeHit)
+          .select("file").distinct().as[String].collect().toSeq,
+          blooms.select("file").distinct().count().toInt)
+    }
     val df =
       if (keep.isEmpty) spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(keep.toIndexedSeq: _*)
+      else spark.read.parquet(keep: _*)
     (df, keep.length, total)
   }
 }

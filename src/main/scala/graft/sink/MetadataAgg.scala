@@ -1,17 +1,17 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** Metadata-only aggregate answering (SURVEY §2D, D227) — the
   * Delta/Iceberg "metadata-only query" served from the sidecar planes
   * the engine already maintains: `count(*)`, per-partition counts, and
   * the stats column's min/max answered WITHOUT scanning a single data
   * page. The reference stack gets this for free from the Glue/Delta
-  * catalogs; the parquet-fallback answer is a per-file row-count
-  * sidecar (`path.__counts__`, built from parquet FOOTER record counts
-  * — driver-side metadata reads, zero Spark jobs) declared and
-  * refreshed through [[Sidecars]] like every other plane, plus the
-  * D107 `__stats__` ranges for min/max.
+  * catalogs; the parquet-fallback answer folds the per-file planes of
+  * the table's one [[Sidecars]] sidecar: the counts plane (parquet
+  * FOOTER record counts — driver-side metadata reads, zero Spark jobs)
+  * and the bounds plane for min/max, plus the NDV, KMH and histogram
+  * planes below.
   *
   * Freshness is the D190 contract: every read here validates its
   * sidecar against the EXACT current file inventory and returns `None`
@@ -25,13 +25,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * stats-on-write trade every lakehouse writer makes. */
 object MetadataAgg {
 
-  private def countsFile(path: String) = Paths.get(path + ".__counts__")
-
   /** (root-relative path, file) for every visible parquet data file,
     * recursing through partition directories (`col=value/...`); hidden
     * and `_`-prefixed entries skipped — the [[StageWriter
     * .listDataFiles]] visibility rule, extended below the root. */
-  private[sink] def listRel(root: Path): Seq[(String, Path)] = {
+  private[graft] def listRel(root: Path): Seq[(String, Path)] = {
     def walk(dir: Path, prefix: String): Seq[(String, Path)] = {
       if (!Files.isDirectory(dir)) return Nil
       val s = Files.list(dir)
@@ -49,13 +47,8 @@ object MetadataAgg {
   }
 
   /** True iff `path` is a FLAT layout — no visible subdirectories. The
-    * `__ndv__`/`__kmh__` planes key their sidecars by
-    * [[StageWriter.listDataFiles]] (root-level only), so on a
-    * partitioned table both the sidecar keyset and the inventory would
-    * be empty and the freshness equality would pass VACUOUSLY — the one
-    * shape where a metadata plane could return a wrong answer (an empty
-    * merge read as NDV 0) instead of degrading. Enforced at declare /
-    * write time (refuse) AND at read time (stand down), so a layout
+    * NDV/KMH/histogram planes describe flat layouts only: enforced at
+    * declare time (refuse) AND at read time (stand down), so a layout
     * that grows partitions after declaration degrades safely too. */
   private[sink] def flatLayout(path: String): Boolean = {
     val dir = Paths.get(path)
@@ -67,7 +60,7 @@ object MetadataAgg {
     } finally s.close()
   }
 
-  private def footerCount(p: Path): Long = {
+  private[sink] def footerCount(p: Path): Long = {
     val conf = new org.apache.hadoop.conf.Configuration()
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -75,107 +68,32 @@ object MetadataAgg {
     try r.getRecordCount finally r.close()
   }
 
-  private def writeSidecar(path: String,
-      counts: Map[String, Long]): Unit =
-    graft.state.TabSidecar.write(countsFile(path),
-      counts.toSeq.sortBy(_._1).map { case (rel, n) => s"$rel\t$n" })
-
-  /** Build/refresh the row-count sidecar from parquet footers — zero
-    * Spark jobs; O(files) driver metadata reads at write cadence. Fine
-    * at battery file counts; a multi-million-file initial build must
-    * not serialize on the driver — that is
-    * [[writeCountsDistributed]]'s job. */
-  def writeCounts(path: String): Unit =
-    writeSidecar(path,
-      listRel(Paths.get(path)).map { case (rel, p) =>
-        rel -> footerCount(p)
-      }.toMap)
-
-  /** Driver-loop → distributed cutover for the full rebuild: past this
-    * many files the serial footer pass is the bottleneck, below it a
-    * Spark job is pure overhead. */
+  /** Driver-loop → distributed cutover of the counts plane's footer
+    * pass: past this many files the serial footer pass is the
+    * bottleneck, below it a Spark job is pure overhead. */
   private[sink] val DistributedRebuildCutover = 256
 
-  /** Build/refresh the counts sidecar, reading footers AS A SPARK JOB
-    * when the inventory is large: the file list parallelizes across
-    * executors, each task opens its footers where the scheduler placed
-    * it, and only (relative name, row count) pairs — the sidecar's own
-    * lines — return to the driver. Sidecar bytes are identical to the
-    * serial path (same inventory walk, same sorted tab format); only
-    * the footer pass moves off the driver. Small inventories keep the
-    * zero-job serial path — a Spark job per small-table refresh would
-    * tax every battery gate for a scale problem they don't have. */
-  def writeCounts(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val files = listRel(Paths.get(path))
-    if (files.size <= DistributedRebuildCutover)
-      writeSidecar(path,
-        files.map { case (rel, p) => rel -> footerCount(p) }.toMap)
-    else writeCountsDistributed(spark, path, files)
-  }
-
-  /** The distributed rebuild itself, cutover-free — specs and ScaleSmoke
-    * pin that this runs as a real job (at ANY file count) and writes a
-    * sidecar byte-identical to the serial path's. */
-  def writeCountsDistributed(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    writeCountsDistributed(spark, path, listRel(Paths.get(path)))
-
-  private[sink] def writeCountsDistributed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      files: Seq[(String, Path)]): Unit = {
+  /** Footer record counts of `files` AS A SPARK JOB: the file list
+    * parallelizes across executors, each task opens its footers where
+    * the scheduler placed it, and only (relative name, row count) pairs
+    * return to the driver — the same counts as the serial footer pass,
+    * only the pass moves off the driver. */
+  private[graft] def distributedCounts(
+      spark: org.apache.spark.sql.SparkSession,
+      files: Seq[(String, Path)]): Map[String, Long] = {
     val rels = files.map { case (rel, p) => (rel, p.toString) }
     val slices = math.max(1, math.min(rels.size,
       spark.sparkContext.defaultParallelism))
-    val counted = spark.sparkContext.parallelize(rels, slices)
+    spark.sparkContext.parallelize(rels, slices)
       .map { case (rel, abs) => rel -> footerCount(Paths.get(abs)) }
-      .collect()
-    writeSidecar(path, counted.toMap)
-  }
-
-  /** O(changed files) maintenance after a file-targeted rewrite: drop
-    * the removed names, footer-count only the added files. Falls back
-    * to a full rebuild when the existing sidecar is absent — and that
-    * rebuild must ALSO exclude `removed`: this hook runs pre-flip
-    * (post-reveal, pre-deletion) from [[Sidecars.afterTargetedRewrite]],
-    * so the touched files are still on disk and a raw inventory
-    * snapshot would bake them in, leaving the sidecar permanently stale
-    * once the commit's `completeDrop` deletes them. */
-  private[sink] def maintainCountsAfterRewrite(path: String,
-      removed: Set[String], added: Seq[Path]): Unit =
-    loadRaw(path) match {
-      case Some(m) =>
-        writeSidecar(path, (m -- removed) ++
-          added.map(p => p.getFileName.toString -> footerCount(p)))
-      case None =>
-        val addedNames = added.map(_.getFileName.toString).toSet
-        val kept = listRel(Paths.get(path)).filterNot { case (rel, _) =>
-          removed.contains(rel) || addedNames.contains(rel)
-        }
-        writeSidecar(path,
-          kept.map { case (rel, p) => rel -> footerCount(p) }.toMap ++
-            added.map(p => p.getFileName.toString -> footerCount(p)))
-    }
-
-  private def loadRaw(path: String): Option[Map[String, Long]] = {
-    val f = countsFile(path)
-    if (!Files.isRegularFile(f)) return None
-    import scala.jdk.CollectionConverters._
-    Some(Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
-      .flatMap { l =>
-        l.split("\t", 2) match {
-          case Array(rel, n) => scala.util.Try(rel -> n.toLong).toOption
-          case _ => None
-        }
-      }.toMap)
+      .collect().toMap
   }
 
   /** Inventory-validated per-file counts: `Some` iff the sidecar covers
     * the CURRENT file inventory exactly — any added, removed or renamed
     * file stands the whole plane down (`None`). */
   def loadCounts(path: String): Option[Map[String, Long]] =
-    loadRaw(path).filter(m =>
-      m.keySet == listRel(Paths.get(path)).map(_._1).toSet)
+    Sidecars.load(path).flatMap(_.of(Sidecars.Counts))
 
   /** Metadata-only `count(*)`: `None` = stand down to the scan. */
   def count(path: String): Option[Long] =
@@ -191,167 +109,39 @@ object MetadataAgg {
       if (i < 0) "" else rel.substring(0, i)
     }.map { case (part, fs) => part -> fs.map(_._2).sum })
 
-  /** Metadata-only min/max of the D107 stats column, folded from the
-    * inventory-validated `__stats__` sidecar (long dialect). `None` =
-    * no sidecar, different column, stale inventory, or a table whose
-    * files hold no non-null keys — every case stands down to the scan
+  /** Metadata-only min/max of an integral bounds-plane column, folded
+    * from the inventory-validated sidecar. `None` = no sidecar, a column
+    * the plane does not carry, stale inventory, or a table whose files
+    * hold no non-null values — every case stands down to the scan
     * rather than guessing. */
-  def minMax(path: String, column: String): Option[(Long, Long)] = {
-    val files = StageWriter.listDataFiles(Paths.get(path))
-    StageWriter.loadStats(path, files, column).flatMap { st =>
-      val bounds = st.values.flatten
-      if (bounds.isEmpty) None
-      else Some((bounds.map(_._1).min, bounds.map(_._2).max))
+  def minMax(path: String, column: String): Option[(Long, Long)] =
+    Sidecars.load(path).flatMap(_.bounds(column)).flatMap {
+      case ("long", st) =>
+        val bounds = st.values.flatten
+        if (bounds.isEmpty) None
+        else Some((bounds.map(_._1.toLong).min, bounds.map(_._2.toLong).max))
+      case _ => None
     }
-  }
+
+  /** The inventory-validated entries of the declared plane `pick`
+    * selects, on a flat layout only: the Ndv/Kmh/Hist planes refuse
+    * partitioned layouts at declare time, and a layout that grows
+    * partitions afterwards stands down here. */
+  private def flatPlane[P <: Sidecars.FilePlane](path: String)(
+      pick: PartialFunction[Sidecars.Plane, P]): Option[(P, Map[String, P#V])] =
+    if (!flatLayout(path)) None
+    else Sidecars.load(path).flatMap { l =>
+      l.declared.collectFirst(pick).flatMap(p => l.of(p).map(p -> _))
+    }
 
   // ---- categorical histogram plane (SURVEY §2D, D236) ----------------
   //
   // The GROUP-BY twin of the counts plane: each file carries the exact
-  // per-value row counts of ONE declared low-cardinality column (a
-  // status / priority / dict column — the shape warehouse zone maps
-  // cannot serve but a histogram trivially can). Per-file histograms
-  // add, so merging the sidecar answers `GROUP BY c` counts and
+  // per-value row counts of ONE declared low-cardinality column. Per-file
+  // histograms add, so merging them answers `GROUP BY c` counts and
   // `count(*) WHERE c = v` with ZERO Spark jobs — exactly, not
-  // approximately. Cardinality is a declared bound enforced at write
-  // time (refuse loudly, never a silently-huge sidecar); NULL is a
-  // tracked bucket (SQL GROUP BY has a NULL group). Flat layouts only
-  // (the __stats__ scope), same freshness contract as every plane.
-
-  private def histFile(path: String) = Paths.get(path + ".__hist__")
-
-  private def encHist(v: Option[String]): String = v match {
-    case None => " " // a SPACE: URLEncoder emits "+" for it, never a raw space
-    case Some(s) => java.net.URLEncoder.encode(s, "UTF-8")
-  }
-  private def decHist(s: String): Option[String] =
-    if (s == " ") None
-    else Some(java.net.URLDecoder.decode(s, "UTF-8"))
-
-  /** Build/refresh the per-file value-histogram plane: ONE
-    * (file, value) count aggregation at write cadence. Refuses when
-    * the column's observed cardinality exceeds `maxDistinct` — a
-    * histogram plane on a high-NDV column is a config error. */
-  def writeHist(spark: org.apache.spark.sql.SparkSession, path: String,
-      colName: String, maxDistinct: Int = 64): Unit = {
-    require(flatLayout(path),
-      s"the histogram plane covers flat layouts only; $path is " +
-        "partitioned")
-    import org.apache.spark.sql.functions._
-    val rows = spark.read.parquet(path)
-      .select(input_file_name().as("f"),
-        col(colName).cast("string").as("v"))
-      .groupBy("f", "v").agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-      .collect()
-    val values = rows.map(r => Option(r.getString(1))).distinct
-    require(values.size <= maxDistinct,
-      s"$colName carries ${values.size} distinct values — above the " +
-        s"declared histogram bound $maxDistinct; raise it or drop the " +
-        "plane")
-    val byFile = rows.groupBy(_.getString(0).split('/').last)
-      .map { case (f, rs) =>
-        f -> rs.map(r => Option(r.getString(1)) -> r.getLong(2)).toSeq
-      }
-    val names = StageWriter.listDataFiles(Paths.get(path))
-      .map(_.getFileName.toString)
-    writeHistSidecar(path, colName, maxDistinct,
-      names.map(n => n -> byFile.getOrElse(n, Seq.empty)).toMap)
-  }
-
-  private def writeHistSidecar(path: String, colName: String,
-      maxDistinct: Int,
-      hists: Map[String, Seq[(Option[String], Long)]]): Unit =
-    graft.state.TabSidecar.write(histFile(path),
-      s"#hist\t$colName\t$maxDistinct" +:
-        hists.toSeq.sortBy(_._1).map { case (n, vs) =>
-          n + "\t" + vs.sortBy(p => p._1.getOrElse(""))
-            .map { case (v, c) => s"${encHist(v)}:$c" }.mkString(",")
-        })
-
-  private def loadHistRaw(path: String): Option[(String, Int,
-      Map[String, Seq[(Option[String], Long)]])] = {
-    val f = histFile(path)
-    if (!Files.isRegularFile(f)) return None
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
-    lines.headOption.flatMap { h =>
-      h.split("\t") match {
-        case Array("#hist", c, k) =>
-          scala.util.Try(k.toInt).toOption.map { kk =>
-            (c, kk, lines.tail.flatMap { l =>
-              l.split("\t", 2) match {
-                case Array(n, body) => Some(n ->
-                  (if (body.isEmpty) Seq.empty[(Option[String], Long)]
-                  else body.split(',').toSeq.map { cell =>
-                    val i = cell.lastIndexOf(':')
-                    decHist(cell.substring(0, i)) ->
-                      cell.substring(i + 1).toLong
-                  }))
-                case Array(n) =>
-                  Some(n -> Seq.empty[(Option[String], Long)])
-                case _ => None
-              }
-            }.toMap)
-          }
-        case _ => None
-      }
-    }
-  }
-
-  /** Per-file value histograms of an explicit FILE LIST. */
-  private def histOfFiles(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[Path], c: String)
-      : Map[String, Seq[(Option[String], Long)]] =
-    if (files.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(files.map(_.toString): _*)
-        .select(input_file_name().as("f"),
-          col(c).cast("string").as("v"))
-        .groupBy("f", "v")
-        .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getString(0).split('/').last)
-        .map { case (f, rs) => f ->
-          rs.map(r => Option(r.getString(1)) -> r.getLong(2)).toSeq }
-    }
-
-  /** The post-rewrite (pre-flip) file inventory: on-disk files minus the
-    * logically-removed names, plus the added files — what the table will
-    * hold once the commit's drop completes (the counts-plane fallback
-    * discipline; see [[maintainCountsAfterRewrite]]). */
-  private def postRewriteFiles(path: String, removed: Set[String],
-      added: Seq[Path]): Seq[Path] = {
-    val addedNames = added.map(_.getFileName.toString).toSet
-    StageWriter.listDataFiles(Paths.get(path)).filterNot { p =>
-      val n = p.getFileName.toString
-      removed.contains(n) || addedNames.contains(n)
-    } ++ added
-  }
-
-  /** O(changed files) histogram maintenance after a targeted rewrite;
-    * a MISSING sidecar rebuilds from the post-rewrite inventory (the
-    * declared column/bound) instead of leaving the plane dead until
-    * the next full rewrite. */
-  private[sink] def maintainHistAfterRewrite(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      removed: Set[String], added: Seq[Path], declaredCol: String,
-      declaredMax: Int): Unit = {
-    if (added.isEmpty && removed.isEmpty) return
-    loadHistRaw(path) match {
-      case Some((c, k, m)) =>
-        val fresh = histOfFiles(spark, added, c)
-        writeHistSidecar(path, c, k, (m -- removed) ++
-          added.map(_.getFileName.toString)
-            .map(n => n -> fresh.getOrElse(n, Seq.empty)))
-      case None =>
-        val files = postRewriteFiles(path, removed, added)
-        val fresh = histOfFiles(spark, files, declaredCol)
-        writeHistSidecar(path, declaredCol, declaredMax,
-          files.map(_.getFileName.toString)
-            .map(n => n -> fresh.getOrElse(n, Seq.empty)).toMap)
-    }
-  }
+  // approximately; NULL is a tracked bucket (SQL GROUP BY has a NULL
+  // group).
 
   /** Metadata-only `GROUP BY column` row counts (the NULL group under
     * `None`): merge the inventory-validated per-file histograms.
@@ -359,16 +149,11 @@ object MetadataAgg {
     * inventory — stand down to the scan. */
   def histCounts(path: String,
       colName: String): Option[Map[Option[String], Long]] =
-    loadHistRaw(path).flatMap { case (c, _, m) =>
-      if (c != colName || !flatLayout(path)) None
-      else {
-        val inv = StageWriter.listDataFiles(Paths.get(path))
-          .map(_.getFileName.toString).toSet
-        if (m.keySet != inv) None
-        else Some(m.values.flatten
-          .groupBy(_._1).map { case (v, cs) => v -> cs.map(_._2).sum })
+    flatPlane(path) { case h: Sidecars.Hist if h.column == colName => h }
+      .map { case (_, m) =>
+        m.values.flatten.groupBy(_._1)
+          .map { case (v, cs) => v -> cs.map(_._2).sum }
       }
-    }
 
   /** Metadata-only `count(*) WHERE column = value` (0 when the value
     * never occurs — a valid exact answer, not a stand-down). */
@@ -378,120 +163,12 @@ object MetadataAgg {
 
   // ---- NDV plane (SURVEY §2D, D231): per-file KMV sketches -----------
   //
-  // The distinct-count twin of the counts plane: each file carries the
-  // k smallest DISTINCT portable hashes of the declared column, and
-  // because the union of per-file bottom-k sets contains the GLOBAL
-  // bottom-k, merging the sidecar rows reproduces the whole-table KMV
+  // Because the union of per-file bottom-k sets contains the GLOBAL
+  // bottom-k, merging the sketches reproduces the whole-table KMV
   // estimate EXACTLY — deterministic, SQL-replayable (the KmvDistinct
   // contract), and servable with zero Spark jobs. This is the NDV
-  // statistic Delta/Iceberg keep for CBO, here as a sidecar the D154
-  // join planner could consume without a scan.
-
-  private def ndvFile(path: String) = Paths.get(path + ".__ndv__")
-
-  /** Build/refresh the per-file NDV plane — ONE scan of the column at
-    * write cadence (the bloom plane's cost class); flat layouts only
-    * (the `__stats__` scope). */
-  def writeNdv(spark: org.apache.spark.sql.SparkSession, path: String,
-      colName: String, k: Int): Unit = {
-    require(flatLayout(path),
-      s"the NDV plane covers flat layouts only (the __stats__ scope); " +
-        s"$path has partition subdirectories its inventory cannot key")
-    import org.apache.spark.sql.functions._
-    val sketches = spark.read.parquet(path)
-      .select(input_file_name().as("f"),
-        graft.llm.Dedup.portableWordHash(col(colName)).as("h"))
-      .where(col("h").isNotNull)
-      .groupBy("f")
-      .agg(udaf(new graft.functions.KmvSketch(k)).apply(col("h"))
-        .as("sk"))
-      .collect()
-      .map(r => r.getString(0).split('/').last ->
-        r.getSeq[Long](1).toArray)
-      .toMap
-    // files whose column is all-null never reach the groupBy: they
-    // carry an EMPTY sketch (contributing nothing), not a missing line
-    // (which would read as a stale inventory)
-    val names = StageWriter.listDataFiles(Paths.get(path))
-      .map(_.getFileName.toString)
-    writeNdvSidecar(path, colName, k,
-      names.map(n => n -> sketches.getOrElse(n, Array.emptyLongArray))
-        .toMap)
-  }
-
-  private def writeNdvSidecar(path: String, colName: String, k: Int,
-      sketches: Map[String, Array[Long]]): Unit =
-    graft.state.TabSidecar.write(ndvFile(path),
-      s"#column\t$colName\t$k" +:
-        sketches.toSeq.sortBy(_._1).map { case (n, sk) =>
-          n + "\t" + sk.mkString(",")
-        })
-
-  private def loadNdvRaw(path: String)
-      : Option[(String, Int, Map[String, Array[Long]])] = {
-    val f = ndvFile(path)
-    if (!Files.isRegularFile(f)) return None
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
-    lines.headOption.flatMap { h =>
-      h.split("\t") match {
-        case Array("#column", c, k) =>
-          scala.util.Try(k.toInt).toOption.map { kk =>
-            (c, kk, lines.tail.flatMap { l =>
-              l.split("\t", 2) match {
-                case Array(n, sk) => Some(n -> (if (sk.isEmpty)
-                  Array.emptyLongArray
-                else sk.split(',').map(_.toLong)))
-                case Array(n) => Some(n -> Array.emptyLongArray)
-                case _ => None
-              }
-            }.toMap)
-          }
-        case _ => None
-      }
-    }
-  }
-
-  /** Per-file KMV sketches of an explicit FILE LIST. */
-  private def ndvOfFiles(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[Path], c: String, k: Int): Map[String, Array[Long]] =
-    if (files.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(files.map(_.toString): _*)
-        .select(input_file_name().as("f"),
-          graft.llm.Dedup.portableWordHash(col(c)).as("h"))
-        .where(col("h").isNotNull)
-        .groupBy("f")
-        .agg(udaf(new graft.functions.KmvSketch(k)).apply(col("h"))
-          .as("sk"))
-        .collect()
-        .map(r => r.getString(0).split('/').last ->
-          r.getSeq[Long](1).toArray).toMap
-    }
-
-  /** O(changed files) NDV maintenance after a targeted rewrite; a
-    * MISSING sidecar rebuilds from the post-rewrite inventory. */
-  private[sink] def maintainNdvAfterRewrite(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      removed: Set[String], added: Seq[Path], declaredCol: String,
-      declaredK: Int): Unit = {
-    if (added.isEmpty && removed.isEmpty) return
-    loadNdvRaw(path) match {
-      case Some((c, k, m)) =>
-        val fresh = ndvOfFiles(spark, added, c, k)
-        writeNdvSidecar(path, c, k, (m -- removed) ++
-          added.map(_.getFileName.toString)
-            .map(n => n -> fresh.getOrElse(n, Array.emptyLongArray)))
-      case None =>
-        val files = postRewriteFiles(path, removed, added)
-        val fresh = ndvOfFiles(spark, files, declaredCol, declaredK)
-        writeNdvSidecar(path, declaredCol, declaredK,
-          files.map(_.getFileName.toString)
-            .map(n => n -> fresh.getOrElse(n, Array.emptyLongArray))
-            .toMap)
-    }
-  }
+  // statistic Delta/Iceberg keep for CBO, here a plane the D154 join
+  // planner consumes without a scan.
 
   /** Metadata-only approximate-distinct estimate of the declared NDV
     * column: merge the inventory-validated per-file sketches (k
@@ -499,163 +176,26 @@ object MetadataAgg {
     * and apply the deterministic KMV estimator. `None` = no plane,
     * different column, or stale inventory — stand down to the scan. */
   def ndvEstimate(path: String, colName: String): Option[Double] =
-    loadNdvRaw(path).flatMap { case (c, k, m) =>
-      if (c != colName || !flatLayout(path)) None
-      else {
-        val inv = StageWriter.listDataFiles(Paths.get(path))
-          .map(_.getFileName.toString).toSet
-        if (m.keySet != inv) None
-        else {
-          val merged = m.values.foldLeft(Array.emptyLongArray) {
-            (acc, sk) => sk.foldLeft(acc)(
-              graft.functions.KmvDistinct.insert(_, _, k))
-          }
-          Some(if (merged.length < k) merged.length.toDouble
-          else (k - 1).toDouble /
-            (merged.last.toDouble / graft.llm.Dedup.PortableP.toDouble))
+    flatPlane(path) { case n: Sidecars.Ndv if n.column == colName => n }
+      .map { case (n, m) =>
+        val merged = m.values.foldLeft(Array.emptyLongArray) {
+          (acc, sk) => sk.foldLeft(acc)(
+            graft.functions.KmvDistinct.insert(_, _, n.k))
         }
+        if (merged.length < n.k) merged.length.toDouble
+        else (n.k - 1).toDouble /
+          (merged.last.toDouble / graft.llm.Dedup.PortableP.toDouble)
       }
-    }
 
   // ---- KMH quantile-sample plane (SURVEY §2D, D232) ------------------
   //
-  // The quantile twin of the NDV plane, completing the metadata-only
-  // family (count / partition counts / min-max / NDV / quantiles): each
-  // file carries its k smallest rows by the portable (hash, key1, key2)
-  // total order, with the declared value column alongside. Any row in
-  // the global bottom-k is in its own file's bottom-k, so merging the
-  // sidecars and re-taking the k smallest reproduces the whole-table
-  // D44 KMH sample EXACTLY — the deterministic "random" sample
-  // q_percentile replays in SQL — and quantiles over it serve with zero
-  // Spark jobs. Honest size note: the sidecar is files×k rows; past
-  // ~10k files (post-compaction at 128 MB that is a ~TB table) read it
-  // as a dataset and fold with one sidecar-sized Spark job — the
-  // stand-down contract keeps every path correct either way.
-
-  private def kmhFile(path: String) = Paths.get(path + ".__kmh__")
-
-  /** One sidecar sample row. */
-  private[sink] final case class KmhRow(h: Long, k1: Long, k2: Long,
-    v: Double)
-
-  /** Build/refresh the per-file KMH plane: one window pass per file at
-    * write cadence (the zorder cost class); flat layouts only. */
-  def writeKmh(spark: org.apache.spark.sql.SparkSession, path: String,
-      valueCol: String, key1: String, key2: String, k: Int): Unit = {
-    require(flatLayout(path),
-      s"the KMH plane covers flat layouts only (the __stats__ scope); " +
-        s"$path has partition subdirectories its inventory cannot key")
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val rows = spark.read.parquet(path)
-      .select(input_file_name().as("f"),
-        graft.llm.Dedup.portableHash60(
-          concat_ws("|", col(key1), col(key2))).as("h"),
-        col(key1).cast("long").as("k1"), col(key2).cast("long").as("k2"),
-        col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("f").orderBy("h", "k1", "k2")))
-      .filter(col("rn") <= k)
-      .select("f", "h", "k1", "k2", "v")
-      .collect()
-      .groupBy(r => r.getString(0).split('/').last)
-      .map { case (n, rs) => n -> rs.map(r => KmhRow(r.getLong(1),
-        r.getLong(2), r.getLong(3), r.getDouble(4))).toSeq }
-    val names = StageWriter.listDataFiles(Paths.get(path))
-      .map(_.getFileName.toString)
-    writeKmhSidecar(path, valueCol, key1, key2, k,
-      names.map(n => n -> rows.getOrElse(n, Seq.empty)).toMap)
-  }
-
-  private def writeKmhSidecar(path: String, valueCol: String,
-      key1: String, key2: String, k: Int,
-      samples: Map[String, Seq[KmhRow]]): Unit =
-    graft.state.TabSidecar.write(kmhFile(path),
-      s"#kmh\t$valueCol\t$key1\t$key2\t$k" +:
-        samples.toSeq.sortBy(_._1).map { case (n, rs) =>
-          n + "\t" + rs.map(r =>
-            s"${r.h}:${r.k1}:${r.k2}:${java.lang.Double
-              .doubleToRawLongBits(r.v)}").mkString(",")
-        })
-
-  private def loadKmhRaw(path: String): Option[(String, String, String,
-      Int, Map[String, Seq[KmhRow]])] = {
-    val f = kmhFile(path)
-    if (!Files.isRegularFile(f)) return None
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
-    lines.headOption.flatMap { h =>
-      h.split("\t") match {
-        case Array("#kmh", vc, c1, c2, k) =>
-          scala.util.Try(k.toInt).toOption.map { kk =>
-            (vc, c1, c2, kk, lines.tail.flatMap { l =>
-              l.split("\t", 2) match {
-                case Array(n, body) => Some(n ->
-                  (if (body.isEmpty) Seq.empty[KmhRow]
-                  else body.split(',').toSeq.map { cell =>
-                    val p = cell.split(':')
-                    KmhRow(p(0).toLong, p(1).toLong, p(2).toLong,
-                      java.lang.Double.longBitsToDouble(p(3).toLong))
-                  }))
-                case Array(n) => Some(n -> Seq.empty[KmhRow])
-                case _ => None
-              }
-            }.toMap)
-          }
-        case _ => None
-      }
-    }
-  }
-
-  /** Per-file KMH bottom-k samples of an explicit FILE LIST. */
-  private def kmhOfFiles(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[Path], vc: String, c1: String, c2: String,
-      k: Int): Map[String, Seq[KmhRow]] =
-    if (files.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      spark.read.parquet(files.map(_.toString): _*)
-        .select(input_file_name().as("f"),
-          graft.llm.Dedup.portableHash60(
-            concat_ws("|", col(c1), col(c2))).as("h"),
-          col(c1).cast("long").as("k1"),
-          col(c2).cast("long").as("k2"),
-          col(vc).cast("double").as("v"))
-        .where(col("v").isNotNull)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("f").orderBy("h", "k1", "k2")))
-        .filter(col("rn") <= k)
-        .select("f", "h", "k1", "k2", "v")
-        .collect()
-        .groupBy(r => r.getString(0).split('/').last)
-        .map { case (n, rs) => n -> rs.map(r => KmhRow(r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getDouble(4))).toSeq }
-    }
-
-  /** O(changed files) KMH maintenance after a targeted rewrite; a
-    * MISSING sidecar rebuilds from the post-rewrite inventory. */
-  private[sink] def maintainKmhAfterRewrite(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      removed: Set[String], added: Seq[Path], declaredVc: String,
-      declaredK1: String, declaredK2: String, declaredK: Int): Unit = {
-    if (added.isEmpty && removed.isEmpty) return
-    loadKmhRaw(path) match {
-      case Some((vc, c1, c2, k, m)) =>
-        val fresh = kmhOfFiles(spark, added, vc, c1, c2, k)
-        writeKmhSidecar(path, vc, c1, c2, k, (m -- removed) ++
-          added.map(_.getFileName.toString)
-            .map(n => n -> fresh.getOrElse(n, Seq.empty)))
-      case None =>
-        val files = postRewriteFiles(path, removed, added)
-        val fresh = kmhOfFiles(spark, files, declaredVc, declaredK1,
-          declaredK2, declaredK)
-        writeKmhSidecar(path, declaredVc, declaredK1, declaredK2,
-          declaredK, files.map(_.getFileName.toString)
-            .map(n => n -> fresh.getOrElse(n, Seq.empty)).toMap)
-    }
-  }
+  // The quantile twin of the NDV plane: merging the per-file samples and
+  // re-taking the k smallest reproduces the whole-table D44 KMH sample
+  // EXACTLY — the deterministic "random" sample q_percentile replays in
+  // SQL. Honest size note: the plane is files×k rows; past ~10k files
+  // (post-compaction at 128 MB that is a ~TB table) the driver-side fold
+  // should become a sidecar-sized Spark job — the stand-down contract
+  // keeps every path correct either way.
 
   /** Metadata-only quantiles of the declared value column: merge the
     * inventory-validated per-file samples, re-take the k smallest by
@@ -667,25 +207,18 @@ object MetadataAgg {
       qs: Seq[Double]): Option[Seq[Double]] = {
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"quantiles must be in [0,1], got $qs")
-    loadKmhRaw(path).flatMap { case (vc, _, _, k, m) =>
-      if (vc != valueCol || !flatLayout(path)) None
-      else {
-        val inv = StageWriter.listDataFiles(Paths.get(path))
-          .map(_.getFileName.toString).toSet
-        if (m.keySet != inv) None
-        else {
-          val sample = m.values.flatten.toArray
-            .sortBy(r => (r.h, r.k1, r.k2)).take(k).map(_.v).sorted
-          if (sample.isEmpty) None
-          else Some(qs.map { q =>
-            val pos = q * (sample.length - 1)
-            val lo = math.floor(pos).toInt
-            val hi = math.ceil(pos).toInt
-            if (lo == hi) sample(lo)
-            else sample(lo) + (pos - lo) * (sample(hi) - sample(lo))
-          })
-        }
+    flatPlane(path) { case p: Sidecars.Kmh if p.valueColumn == valueCol => p }
+      .flatMap { case (p, m) =>
+        val sample = m.values.flatten.toArray
+          .sortBy(r => (r.h, r.k1, r.k2)).take(p.k).map(_.v).sorted
+        if (sample.isEmpty) None
+        else Some(qs.map { q =>
+          val pos = q * (sample.length - 1)
+          val lo = math.floor(pos).toInt
+          val hi = math.ceil(pos).toInt
+          if (lo == hi) sample(lo)
+          else sample(lo) + (pos - lo) * (sample(hi) - sample(lo))
+        })
       }
-    }
   }
 }

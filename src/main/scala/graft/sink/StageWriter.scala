@@ -3,8 +3,7 @@ package graft.sink
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
-  ShortType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Stage-zone writer (SURVEY C5–C9).
   *
@@ -123,10 +122,9 @@ object StageWriter {
     * The guard rails compose:
     *  - D197 CHECKs validate the STAGED batch bytes — refusal deletes
     *    the staging dir with the target and every plane untouched;
-    *  - declared pruning planes maintain INCREMENTALLY, O(new files):
-    *    zone maps patch, declared blooms hash only the new files, and
-    *    the range-stats sidecar unions the new files' (footer-first)
-    *    ranges — no plane silently stands down after an append;
+    *  - declared planes maintain INCREMENTALLY, O(new files): every
+    *    plane summarizes only the new files (bounds footer-first) — no
+    *    plane silently stands down after an append;
     *  - reveal is hidden-staging + per-file atomic rename (the
     *    targeted-merge ordering): a crash mid-reveal leaves a PARTIAL
     *    batch visible to plain readers (re-land after upstream dedup);
@@ -171,24 +169,11 @@ object StageWriter {
     staged.foreach { case (hid, vis) =>
       Files.move(hid, vis, StandardCopyOption.ATOMIC_MOVE) }
     deleteRecursively(Paths.get(tmpDir))
-    val added = staged.map(_._2)
-    // range-stats plane: union the valid existing per-file ranges with
-    // the new files' (footer-first — usually zero jobs); a stale or
-    // foreign sidecar rebuilds in full rather than patching a lie
-    statsHeader(path).foreach { case (c, kind) =>
-      if (kind == "string") loadStatsStr(path, preFiles, c) match {
-        case Some(existing) =>
-          writeStatsStr(path, c, existing ++ computeStatsStr(spark, added, c))
-        case None => refreshStats(spark, path, c)
-      } else loadStats(path, preFiles, c) match {
-        case Some(existing) =>
-          writeStats(path, c, existing ++ computeStats(spark, added, c))
-        case None => refreshStats(spark, path, c)
-      }
-    }
-    // zone map patches, declared blooms hash only the new files
+    // declared planes summarize only the new files (bounds from their
+    // footers — usually zero jobs); a stale or foreign sidecar rebuilds
+    // in full rather than patching a lie
     Sidecars.afterTargetedRewrite(spark, path,
-      preFiles.map(_.getFileName.toString), Set.empty, added)
+      preFiles.map(_.getFileName.toString), Set.empty, staged.map(_._2))
   }
 
   /** Exactly-once streaming APPEND (SURVEY §2D, D208) — the
@@ -482,19 +467,11 @@ object StageWriter {
       keys: Seq[String],
       localMerge: (DataFrame, DataFrame) => DataFrame)
 
-  /** Stats dialect of a merge key's type: integral and string keys each
-    * have a per-file (min, max) manifest plane; anything else (None)
-    * falls back to the full rewrite. */
-  private def statsKind(dt: DataType): Option[String] = dt match {
-    case ByteType | ShortType | IntegerType | LongType => Some("long")
-    case org.apache.spark.sql.types.StringType => Some("string")
-    case _ => None
-  }
-
   /** Can this merge rewrite only key-intersecting files? Requires a flat
-    * (unpartitioned) existing table, a first merge key with a stats plane
-    * (integral or string — per-file min/max needs a total order the
-    * oracle can replay) on BOTH sides, and exact column-name→type parity
+    * (unpartitioned) existing table, a first merge key with a bounds
+    * kind (integral or string — per-file min/max needs a total order
+    * the oracle can replay; anything else falls back to the full
+    * rewrite) on BOTH sides, and exact column-name→type parity
     * between base and effective delta — a schema-evolving delta falls
     * back to the full rewrite, which is the only way the untouched files
     * can stay byte-identical while the directory keeps one schema. */
@@ -503,7 +480,7 @@ object StageWriter {
     val eff = t.delta.drop(t.dropCols: _*).schema
     t.keys.nonEmpty && m(eff) == m(base.schema) &&
       base.schema.fields.find(_.name == t.keys.head).exists(f =>
-        statsKind(f.dataType).isDefined)
+        Sidecars.kindOf(f.dataType).isDefined)
   }
 
   /** The optimistic claim → read → merge → swap → flip loop shared by the
@@ -576,23 +553,16 @@ object StageWriter {
               val out =
                 if (partitionBy.isEmpty) merged.coalesce(fileBudget(spark, n))
                 else merged
+              // declare the key's bounds plane BEFORE the rewrite, whose
+              // refresh then summarizes it with every other plane (from
+              // the new footers — O(this write)), so the FIRST incremental
+              // merge after a bootstrap or full rewrite is already
+              // file-targeted
+              targeted.filter(_ => partitionBy.isEmpty).map(_.keys.head)
+                .filter(k => merged.schema.fields.exists(f =>
+                  f.name == k && Sidecars.kindOf(f.dataType).isDefined))
+                .foreach(Sidecars.declareBounds(spark, path, _))
               overwrite(out, path, partitionBy)
-              // seed the key-range sidecar NOW (one key-column scan of
-              // what was just written — O(this write)), so the FIRST
-              // incremental merge after a bootstrap or full rewrite is
-              // already file-targeted instead of paying an O(table)
-              // stats bootstrap scan
-              targeted.filter(_ => partitionBy.isEmpty).foreach { t =>
-                val key1 = t.keys.head
-                merged.schema.fields.find(_.name == key1)
-                  .flatMap(f => statsKind(f.dataType)).foreach { kind =>
-                    val files = listDataFiles(Paths.get(path))
-                    if (kind == "long")
-                      writeStats(path, key1, computeStats(spark, files, key1))
-                    else writeStatsStr(path, key1,
-                      computeStatsStr(spark, files, key1))
-                  }
-              }
             } finally merged.unpersist()
           }
           val tmp = Paths.get(path + s".__seq__.tmp$next")
@@ -621,7 +591,7 @@ object StageWriter {
     * can only be the leftover of an attempt whose pointer never flipped:
     * uncommitted rows no reader was ever promised. Deleting them first
     * restores the exact committed snapshot (the re-merge is exact, never
-    * best-effort), revalidates the stats sidecar's file inventory so
+    * best-effort), revalidates the planes sidecar's file inventory so
     * recovery stays on the O(delta) targeted path, and makes repair
     * self-healing — no FileAlreadyExistsException on re-reveal, no
     * duplicate rows waiting on manual cleanup. The prefix includes the
@@ -652,31 +622,6 @@ object StageWriter {
     math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
       n / 50000L + 1L)).toInt
 
-  private def statsFile(path: String) = Paths.get(path + ".__stats__")
-
-  /** Which column the stats sidecar describes (None = no sidecar) —
-    * lets the [[graft.plans.StatsFilePrune]] optimizer rule discover
-    * prunability without knowing the key upfront. Handles both header
-    * forms: `#column\tC` (integral, legacy) and `#column\tC\tstring`. */
-  private[graft] def statsColumn(path: String): Option[String] =
-    statsHeader(path).map(_._1)
-
-  /** (column, dialect) of the stats sidecar: dialect is "long" (legacy
-    * two-field header) or "string". */
-  private[graft] def statsHeader(path: String): Option[(String, String)] = {
-    val f = statsFile(path)
-    if (!Files.exists(f)) None
-    else Files.readAllLines(f).stream().findFirst()
-      .map[Option[(String, String)]] { l =>
-        if (!l.startsWith("#column\t")) None
-        else l.split("\t") match {
-          case Array(_, c) => Some((c, "long"))
-          case Array(_, c, "string") => Some((c, "string"))
-          case _ => None
-        }
-      }.orElse(None)
-  }
-
   /** Visible data files of a flat Parquet dir (skips `_SUCCESS`, hidden
     * in-progress merge files, sidecars). */
   private[graft] def listDataFiles(dir: Path): Seq[Path] = {
@@ -688,234 +633,6 @@ object StageWriter {
         !n.startsWith(".") && !n.startsWith("_")
     }.sortBy(_.getFileName.toString).toSeq
     finally s.close()
-  }
-
-  /** Per-file (min, max) of the first merge key — the D107 data-skipping
-    * manifest persisted as a sidecar so steady-state merges never rescan
-    * the base. `None` = the file holds no non-null keys (empty file or
-    * all-null keys): such a file can never equi-match a delta row, so it
-    * is never touched. */
-  private[graft] type FileStats = Map[String, Option[(Long, Long)]]
-
-  /** Load the sidecar iff it describes THIS key column and its file
-    * inventory matches the directory EXACTLY (an `overwrite` or external
-    * rewrite invalidates it by construction — Spark part-file names are
-    * uuid-unique; stats for a different column must never prune a merge
-    * on this one). */
-  private[graft] def loadStats(path: String, files: Seq[Path], column: String)
-      : Option[FileStats] = {
-    val f = statsFile(path)
-    if (!Files.exists(f)) return None
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
-    if (!lines.headOption.contains(s"#column\t$column")) return None
-    val m: FileStats = lines.tail.map { l =>
-      val a = l.split("\t", 3)
-      a(0) -> (if (a(1) == "-") None else Some((a(1).toLong, a(2).toLong)))
-    }.toMap
-    if (m.keySet == files.map(_.getFileName.toString).toSet) Some(m) else None
-  }
-
-  private def writeStats(path: String, column: String,
-      stats: FileStats): Unit = {
-    val lines = s"#column\t$column" +: stats.toSeq.sortBy(_._1).map {
-      case (n, Some((mn, mx))) => s"$n\t$mn\t$mx"
-      case (n, None) => s"$n\t-\t-"
-    }
-    val tmp = Files.createTempFile(
-      Paths.get(path).toAbsolutePath.getParent, ".stats", ".tmp")
-    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
-    Files.move(tmp, statsFile(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** ONE scan of ONLY the key column over the given files → per-file
-    * (min, max). Runs over the whole base once (first targeted merge,
-    * sidecar bootstrap) and over just the new files afterwards. */
-  private def computeStats(spark: SparkSession, files: Seq[Path],
-      key: String): FileStats = {
-    if (files.isEmpty) return Map.empty
-    footerStats(files, key).getOrElse(scanStats(spark, files, key))
-  }
-
-  /** Per-file (min, max) of `key` from parquet FOOTER row-group
-    * statistics — zero Spark jobs, driver-side metadata reads only. This
-    * is what makes the post-merge sidecar seed effectively free: the
-    * writer just produced these footers, so re-deriving the ranges by
-    * scanning the key column (a whole extra job per merge commit, and at
-    * 100 TB a scan of everything just written) duplicates information
-    * parquet already wrote down. Falls back to None (→ the scan) when
-    * any file lacks usable integral statistics — never guesses. */
-  private[sink] def footerStats(files: Seq[Path],
-      key: String): Option[FileStats] = {
-    import org.apache.parquet.column.statistics.{IntStatistics,
-      LongStatistics}
-    val conf = new org.apache.hadoop.conf.Configuration()
-    try {
-      Some(files.map { p =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), conf))
-        try {
-          var mn = Long.MaxValue
-          var mx = Long.MinValue
-          var any = false
-          reader.getFooter.getBlocks.forEach { b =>
-            b.getColumns.forEach { c =>
-              if (c.getPath.toDotString == key) {
-                val st = c.getStatistics
-                if (st == null) throw new IllegalStateException("no stats")
-                if (st.hasNonNullValue) {
-                  val (lo, hi) = st match {
-                    case l: LongStatistics => (l.getMin, l.getMax)
-                    case i: IntStatistics => (i.getMin.toLong, i.getMax.toLong)
-                    case _ => throw new IllegalStateException(
-                      s"non-integral stats: ${st.getClass.getSimpleName}")
-                  }
-                  mn = math.min(mn, lo); mx = math.max(mx, hi); any = true
-                }
-              }
-            }
-          }
-          p.getFileName.toString -> (if (any) Some((mn, mx)) else None)
-        } finally reader.close()
-      }.toMap)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Scan fallback for [[footerStats]]: one key-column job. */
-  private def scanStats(spark: SparkSession, files: Seq[Path],
-      key: String): FileStats = {
-    val scanned = spark.read.parquet(files.map(_.toString): _*)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(key).cast("long")).as("mn"),
-        max(col(key).cast("long")).as("mx"))
-      .collect()
-      .map { r =>
-        val base = r.getString(0).split('/').last
-        base -> (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
-      }.toMap
-    // files the scan never emitted a row for are EMPTY → never touched
-    files.map(_.getFileName.toString)
-      .map(n => n -> scanned.getOrElse(n, None)).toMap
-  }
-
-  // ---- STRING-key stats plane (D163): the same per-file (min, max)
-  // manifest for string merge keys, so the natural keys most tables
-  // actually carry (uuids, codes, composite business keys) get the
-  // O(delta) file-targeted merge too, not the full-rewrite fallback.
-  // Separate sidecar dialect (header `#column\tC\tstring`, URL-encoded
-  // bounds with an explicit presence flag — raw strings can contain tabs,
-  // newlines, or a literal "-") so the legacy integral format and its
-  // consumers (StatsFilePrune) are untouched; the long loader rejects a
-  // string header by construction and stands down.
-
-  private[graft] type FileStatsS = Map[String, Option[(String, String)]]
-
-  private def encS(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-  private def decS(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-
-  private[graft] def loadStatsStr(path: String, files: Seq[Path],
-      column: String): Option[FileStatsS] = {
-    val f = statsFile(path)
-    if (!Files.exists(f)) return None
-    import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
-    if (!lines.headOption.contains(s"#column\t$column\tstring")) return None
-    val m: FileStatsS = lines.tail.map { l =>
-      val a = l.split("\t", 4)
-      a(0) -> (if (a(1) == "0") None else Some((decS(a(2)), decS(a(3)))))
-    }.toMap
-    if (m.keySet == files.map(_.getFileName.toString).toSet) Some(m) else None
-  }
-
-  private def writeStatsStr(path: String, column: String,
-      stats: FileStatsS): Unit = {
-    val lines = s"#column\t$column\tstring" +:
-      stats.toSeq.sortBy(_._1).map {
-        case (n, Some((mn, mx))) => s"$n\t1\t${encS(mn)}\t${encS(mx)}"
-        case (n, None) => s"$n\t0"
-      }
-    val tmp = Files.createTempFile(
-      Paths.get(path).toAbsolutePath.getParent, ".stats", ".tmp")
-    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
-    Files.move(tmp, statsFile(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def computeStatsStr(spark: SparkSession, files: Seq[Path],
-      key: String): FileStatsS = {
-    if (files.isEmpty) return Map.empty
-    footerStatsStr(files, key).getOrElse(scanStatsStr(spark, files, key))
-  }
-
-  /** Per-file (min, max) of a STRING key from parquet footer binary
-    * statistics — driver-side metadata only, like [[footerStats]]. Two
-    * extra guards the integral path doesn't need: (a) writers may OMIT
-    * binary stats (large values) — absent stats with non-null rows must
-    * fall back to the scan, never read as "no keys" (that would silently
-    * skip a touched file: data loss); (b) binary stats may be TRUNCATED
-    * bounds, and truncation can split a multi-byte UTF-8 sequence, so
-    * only pure-ASCII bounds are trusted — anything else falls back. */
-  private[sink] def footerStatsStr(files: Seq[Path],
-      key: String): Option[FileStatsS] = {
-    import org.apache.parquet.column.statistics.BinaryStatistics
-    val conf = new org.apache.hadoop.conf.Configuration()
-    try {
-      Some(files.map { p =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), conf))
-        try {
-          var mn: String = null
-          var mx: String = null
-          reader.getFooter.getBlocks.forEach { b =>
-            b.getColumns.forEach { c =>
-              if (c.getPath.toDotString == key) {
-                val st = c.getStatistics
-                if (st == null) throw new IllegalStateException("no stats")
-                if (st.hasNonNullValue) {
-                  val bs = st match {
-                    case x: BinaryStatistics => x
-                    case _ => throw new IllegalStateException(
-                      s"non-binary stats: ${st.getClass.getSimpleName}")
-                  }
-                  val loB = bs.genericGetMin.getBytes
-                  val hiB = bs.genericGetMax.getBytes
-                  if (loB.exists(_ < 0) || hiB.exists(_ < 0))
-                    throw new IllegalStateException("non-ASCII bound")
-                  val lo = new String(loB, java.nio.charset.StandardCharsets.UTF_8)
-                  val hi = new String(hiB, java.nio.charset.StandardCharsets.UTF_8)
-                  if (mn == null || lo < mn) mn = lo
-                  if (mx == null || hi > mx) mx = hi
-                } else if (st.getNumNulls != c.getValueCount)
-                  // stats omitted but rows exist: "no bounds" is NOT
-                  // "no keys" — bail to the scan
-                  throw new IllegalStateException("omitted binary stats")
-              }
-            }
-          }
-          p.getFileName.toString ->
-            (if (mn == null) None else Some((mn, mx)))
-        } finally reader.close()
-      }.toMap)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  private def scanStatsStr(spark: SparkSession, files: Seq[Path],
-      key: String): FileStatsS = {
-    val scanned = spark.read.parquet(files.map(_.toString): _*)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col(key).cast("string")).as("mn"),
-        max(col(key).cast("string")).as("mx"))
-      .collect()
-      .map { r =>
-        val base = r.getString(0).split('/').last
-        base -> (if (r.isNullAt(1)) None
-          else Some((r.getString(1), r.getString(2))))
-      }.toMap
-    files.map(_.getFileName.toString)
-      .map(n => n -> scanned.getOrElse(n, None)).toMap
   }
 
   /** Delta-proportional MERGE commit (Delta's file-targeted MERGE on the
@@ -955,7 +672,6 @@ object StageWriter {
       base: DataFrame, t: Targeted, next: Long): Unit = {
     val dir = Paths.get(path)
     val key1 = t.keys.head
-    val kind = statsKind(base.schema(key1).dataType).get
     val dataFiles = listDataFiles(dir)
     // evaluate the caller's delta plan ONCE: it feeds BOTH the
     // touched-file probe and the merge itself, so an expensive delta
@@ -965,22 +681,24 @@ object StageWriter {
     // delta is O(batch) by the merge's own cost model, so materializing
     // it is bounded at any scale (opt guide §5).
     val delta = t.delta.localCheckpoint()
-    // both stats planes normalize to string-encoded bounds internally;
-    // the integral plane persists in its legacy sidecar dialect so
-    // StatsFilePrune and existing sidecars keep working unchanged
-    def toS(s: FileStats): FileStatsS = s.map { case (f, o) =>
-      f -> o.map { case (a, b) => (a.toString, b.toString) } }
-    val stats: FileStatsS =
-      if (kind == "long")
-        loadStats(path, dataFiles, key1).map(toS)
-          .getOrElse(toS(computeStats(spark, dataFiles, key1)))
-      else loadStatsStr(path, dataFiles, key1)
-        .getOrElse(computeStatsStr(spark, dataFiles, key1))
+    // the key's per-file bounds from the bounds plane; a missing or
+    // stale plane (first merge, foreign writer) declares the key's bounds
+    // and rebuilds every declared plane against this inventory — and a
+    // plane that still does not validate touches every file
+    def keyBounds = Sidecars.load(path).flatMap(_.bounds(key1)).map(_._2)
+    val kind = Sidecars.kindOf(base.schema(key1).dataType).get
+    val bounds = keyBounds.orElse {
+      Sidecars.declareBounds(spark, path, key1)
+      Sidecars.refreshAfterWrite(spark, path)
+      keyBounds
+    }
     // touched = any delta key inside the file's [mn, mx]; the range table
     // is file-count rows (the Delta-log size class) and broadcasts, so
     // this is ONE pass over the delta keys — never a base scan
+    val stats = bounds.getOrElse(Map.empty)
     val touched: Set[String] =
-      if (!stats.values.exists(_.isDefined)) Set.empty
+      if (bounds.isEmpty) dataFiles.map(_.getFileName.toString).toSet
+      else if (!stats.values.exists(_.isDefined)) Set.empty
       else {
         import spark.implicits._
         val rangesDf =
@@ -1022,11 +740,6 @@ object StageWriter {
       catch { case t: Throwable =>
         deleteRecursively(Paths.get(tmpDir)); throw t }
       val parts = listDataFiles(Paths.get(tmpDir))
-      val newStats: FileStatsS = // O(delta) scan (or footer-only read)
-        if (kind == "long")
-          computeStats(spark, parts, key1).map { case (f, o) =>
-            f -> o.map { case (a, b) => (a.toString, b.toString) } }
-        else computeStatsStr(spark, parts, key1)
       // hidden staging → atomic reveal → delete touched (see ordering doc).
       // The nonce uniquifies THIS attempt's names: a re-run after a crash
       // mid-reveal must never Files.move onto a previous attempt's
@@ -1047,17 +760,8 @@ object StageWriter {
       staged.foreach { case (hid, vis, _) =>
         Files.move(hid, vis, StandardCopyOption.ATOMIC_MOVE) }
       deleteRecursively(Paths.get(tmpDir))
-      val kept: FileStatsS =
-        stats.filter { case (f, _) => !touched(f) } ++
-          staged.map { case (_, vis, orig) =>
-            vis.getFileName.toString -> newStats.getOrElse(orig, None) }
-      if (kind == "long")
-        writeStats(path, key1, kept.map { case (f, o) =>
-          f -> o.map { case (a, b) => (a.toLong, b.toLong) } })
-      else writeStatsStr(path, key1, kept)
-      // keep every declared pruning plane alive across merges (D190):
-      // zone maps patch per-file, declared blooms re-filter only the
-      // new files, ranges were re-derived inline above — O(new files)
+      // keep every declared plane (the key's bounds included) alive
+      // across merges (D190): only the new files summarize — O(new files)
       Sidecars.afterTargetedRewrite(spark, path,
         dataFiles.map(_.getFileName.toString), touched,
         staged.map(_._2))
@@ -1209,9 +913,8 @@ object StageWriter {
     * next sequence (mergers and compactors exclude each other), stages
     * hidden `m$seq-` generation files, persists the drop list, reveals,
     * flips the sequence (THE commit point), then drops the rewritten
-    * small files replayably. Every pruning plane stays fresh: the stats
-    * sidecar patches O(new files) (footer-first), declared zone/bloom/
-    * counts planes patch through [[Sidecars.afterTargetedRewrite]].
+    * small files replayably. Every declared plane stays fresh, O(new
+    * files), through [[Sidecars.afterTargetedRewrite]].
     *
     * File-size selection is driver-side metadata (Files.size), never a
     * data scan; the only data read is the small tail itself. */
@@ -1273,22 +976,6 @@ object StageWriter {
           staged.foreach { case (hid, vis, _) =>
             Files.move(hid, vis, StandardCopyOption.ATOMIC_MOVE) }
           deleteRecursively(Paths.get(tmpDir))
-          // keep the stats plane fresh: patch O(new files), footer-first
-          statsHeader(path).foreach { case (c, kind) =>
-            val newPaths = staged.map(_._2)
-            if (kind == "long")
-              loadStats(path, all, c).foreach { st =>
-                writeStats(path, c,
-                  st.filter { case (f, _) => !smallNames(f) } ++
-                    computeStats(spark, newPaths, c))
-              }
-            else
-              loadStatsStr(path, all, c).foreach { st =>
-                writeStatsStr(path, c,
-                  st.filter { case (f, _) => !smallNames(f) } ++
-                    computeStatsStr(spark, newPaths, c))
-              }
-          }
           Sidecars.afterTargetedRewrite(spark, path,
             all.map(_.getFileName.toString), smallNames,
             staged.map(_._2))
@@ -1323,9 +1010,11 @@ object StageWriter {
     *     or z-order-clustered on two keys when `zorderBy` is given (Delta
     *     `OPTIMIZE ZORDER BY`, [[Layout.zorderWrite]] through the same
     *     tmp-swap as [[overwrite]]);
-    *  2. refresh the per-file key-range sidecar for `statsColumn` — so the
-    *     NEXT [[mergeInto]] starts file-targeted without a base rescan, and
-    *     [[Layout.prunedRead]]-style data skipping sees fresh stats;
+    *  2. declare `statsColumn` in the table's bounds plane (unless it is
+    *     there already), which the rewrite's refresh summarizes with every
+    *     other declared plane — so the NEXT [[mergeInto]] starts
+    *     file-targeted without a base rescan, and pruning sees fresh
+    *     bounds;
     *  3. regenerate the symlink manifest ([[writeManifest]]);
     *  4. [[vacuum]] swap/claim leftovers past `retentionMs`.
     *
@@ -1343,6 +1032,7 @@ object StageWriter {
     val bytes = dirSize(dir)
     val files = math.max(1L,
       (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    statsColumn.foreach(Sidecars.declareBounds(spark, path, _))
     zorderBy match {
       case Some((x, y)) =>
         // size zorderBits to the key domain: bits the keys overflow wrap
@@ -1359,63 +1049,13 @@ object StageWriter {
       case None => compact(spark, path, targetFileBytes, statsColumn)
     }
     val after = listDataFiles(dir)
-    // a DECLARED Stats(statsColumn) plane was (or is about to be, zorder
-    // arm) rebuilt by refreshAfterWrite against this same inventory —
-    // re-deriving it here would be a second identical footer/scan pass
-    val statsDeclared = statsColumn.exists(c =>
-      Sidecars.declared(path).contains(Sidecars.Stats(c)))
-    if (!statsDeclared) statsColumn.foreach(refreshStats(spark, path, _))
     // the zorder arm swaps directly (no overwrite hook) — declared
     // planes refresh here; the compact arm already refreshed via
-    // overwrite, and refreshAfterWrite is a no-op without a manifest
+    // overwrite, and refreshAfterWrite is a no-op without a sidecar
     if (zorderBy.isDefined) Sidecars.refreshAfterWrite(spark, path)
     writeManifest(path)
     vacuum(path, retentionMs)
     OptimizeReport(before, after.size, bytes)
-  }
-
-  /** Dialect-aware key-range sidecar refresh against the CURRENT
-    * inventory: a string stats column must land in the string dialect —
-    * casting it to long would record every file as "no non-null keys",
-    * which a pruning reader takes as "never matches". One scan of only
-    * the stat column. */
-  private[sink] def refreshStats(spark: SparkSession, path: String,
-      c: String): Unit = {
-    val files = listDataFiles(Paths.get(path))
-    val dt = spark.read.parquet(path).schema.fields
-      .find(_.name == c).map(_.dataType)
-    dt.flatMap(statsKind) match {
-      case Some("string") => writeStatsStr(path, c,
-        computeStatsStr(spark, files, c))
-      case Some(_) => writeStats(path, c, computeStats(spark, files, c))
-      case None => throw new IllegalArgumentException(
-        s"$path: stats column $c has no stats dialect " +
-          s"(type ${dt.map(_.simpleString).getOrElse("missing")})")
-    }
-  }
-
-  /** Write the stats sidecar from bounds another plane's scan already
-    * gathered (the D190 combined stats+zone refresh — ZERO jobs here:
-    * the kind comes from the caller's one schema read, the inventory is
-    * a driver-side listing). `bounds` is ZoneMap's
-    * stringified-in-own-order report; both dialects stringify
-    * identically, so the sidecar is byte-identical to a dedicated
-    * [[refreshStats]] pass. Files absent from the report (zero-row
-    * parts) record as no-bounds, same as the scan paths. */
-  private[sink] def writeStatsFromBounds(path: String, c: String,
-      kind: String,
-      bounds: Map[String, Map[String, Option[(String, String)]]]): Unit = {
-    val files = listDataFiles(Paths.get(path)).map(_.getFileName.toString)
-    val per: Map[String, Option[(String, String)]] =
-      files.map(f =>
-        f -> bounds.getOrElse(f, Map.empty).getOrElse(c, None)).toMap
-    kind match {
-      case "string" => writeStatsStr(path, c, per)
-      case "long" => writeStats(path, c, per.map { case (f, o) =>
-        f -> o.map { case (a, b) => (a.toLong, b.toLong) } })
-      case other => throw new IllegalArgumentException(
-        s"$path: stats column $c has no stats dialect (kind $other)")
-    }
   }
 
   /** Symlink-format manifest — the engine-neutral file inventory Delta

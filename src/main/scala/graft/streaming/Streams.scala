@@ -753,8 +753,8 @@ object Streams {
     values.select(col(windowCol).cast("long").as("w"),
         col(valueCol).cast("double").as("v"))
       // null window keys / values would NPE the non-nullable tuple
-      // encode and kill the query — the batch planes' (writeKmh /
-      // writeNdv) isNotNull discipline applies here too
+      // encode and kill the query — the batch planes' (Sidecars.Kmh /
+      // Sidecars.Ndv) isNotNull discipline applies here too
       .where(col("w").isNotNull && col("v").isNotNull)
       .as[(Long, Double)]
       .groupByKey(_._1)

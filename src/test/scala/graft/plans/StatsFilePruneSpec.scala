@@ -79,7 +79,7 @@ class StatsFilePruneSpec extends AnyFunSuite {
     val (tmp, path) = writeTable()
     try {
       // rewrite the data files without refreshing the sidecar: the file
-      // inventory no longer matches, loadStats must reject it
+      // inventory no longer matches, Sidecars.load must reject it
       spark.range(0, 8000).select(col("id").as("k"),
           (col("id") % 97).as("v"))
         .repartition(3)
@@ -125,10 +125,39 @@ class StatsFilePruneSpec extends AnyFunSuite {
         val exotic = spark.read.parquet(path)
           .filter(col("k") >= "k\u00e4")
         assert(scanFiles(exotic).head == total)
-        // the long-dialect loader must reject the string sidecar
-        assert(StageWriter.loadStats(path, StageWriter.listDataFiles(
-          java.nio.file.Paths.get(path)), "k").isEmpty)
+        // the bounds plane records k in its STRING kind, so no reader
+        // compares these bounds as longs
+        assert(graft.sink.Sidecars.load(path).flatMap(_.bounds("k"))
+          .map(_._1).contains("string"))
       }
     } finally StageWriter.deleteRecursively(tmp)
+  }
+
+  test("one rule prunes on every bounds column: a filter on a Stats " +
+    "AND a Zone column reads only the files both admit") {
+    val tmp = java.nio.file.Files.createTempDirectory("sfp_merged")
+    try {
+      val path = tmp.resolve("t").toString
+      // 8 files of 1000 consecutive k each; c = (k / 500) % 4, so the
+      // even files hold c in {0, 1} and the odd files c in {2, 3}
+      (0 until 8).foreach { i =>
+        spark.range(i * 1000L, (i + 1) * 1000L)
+          .select(col("id").as("k"),
+            (col("id").divide(500).cast("long") % 4).as("c"))
+          .coalesce(1).write.mode("append").parquet(path)
+      }
+      graft.sink.Sidecars.declare(spark, path, Seq(
+        graft.sink.Sidecars.Stats("k"), graft.sink.Sidecars.Zone(Seq("c"))))
+      StatsFilePrune.ensureInstalled(spark)
+      ZoneMapPrune.ensureInstalled(spark)
+      def q(p: org.apache.spark.sql.Column) = spark.read.parquet(path).filter(p)
+      assert(scanFiles(q(col("k") < 4000)) == Seq(4))
+      assert(scanFiles(q(col("c") >= 2)) == Seq(4))
+      val both = q(col("k") < 4000 && col("c") >= 2)
+      assert(scanFiles(both) == Seq(2),
+        "both bounds must narrow the scan together")
+      assert(both.count() == 2000)
+    } finally StageWriter.deleteRecursively(
+      java.nio.file.Paths.get(tmp.toString))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.sink.{StageWriter, ZoneMap}
+import graft.sink.{Sidecars, StageWriter}
 
 /** D183 — multi-column zone map: long AND string columns prune, results
   * identical, stale maps and unbounded predicates stand down. */
@@ -28,7 +28,7 @@ class ZoneMapPruneSpec extends AnyFunSuite {
         (col("id") % 97).as("v"))
       .repartitionByRange(8, col("k"))
       .write.parquet(path)
-    ZoneMap.write(spark, path, Seq("k", "s"))
+    Sidecars.declare(spark, path, Seq(Sidecars.Zone(Seq("k", "s"))))
     ZoneMapPrune.ensureInstalled(spark)
     (tmp, path)
   }
@@ -72,7 +72,7 @@ class ZoneMapPruneSpec extends AnyFunSuite {
       val total = StageWriter.listDataFiles(
         java.nio.file.Paths.get(path)).size
       assert(scanFiles(kq()) == total, "stale zone map must stand down")
-      ZoneMap.write(spark, path, Seq("k", "s"))
+      Sidecars.declare(spark, path, Seq(Sidecars.Zone(Seq("k", "s"))))
       assert(scanFiles(kq()) <= before + 1, "rewritten map prunes again")
       assert(kq().count() == 1000)
     } finally StageWriter.deleteRecursively(tmp)
@@ -87,7 +87,7 @@ class ZoneMapPruneSpec extends AnyFunSuite {
           (col("id") % 500).as("y"))
         .repartitionByRange(8, col("k"))
         .write.parquet(path)
-      ZoneMap.write(spark, path, Seq("k", "y"))
+      Sidecars.declare(spark, path, Seq(Sidecars.Zone(Seq("k", "y"))))
       ZoneMapPrune.ensureInstalled(spark)
       val total0 = StageWriter.listDataFiles(
         java.nio.file.Paths.get(path)).size

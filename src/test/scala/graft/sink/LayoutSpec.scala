@@ -144,14 +144,14 @@ class LayoutSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("bloomstale").toString
     val mk = (n: Long) => (0L until n).map(i => (i, i % 8)).toDF("x", "y")
     mk(1024L).repartition(4).write.parquet(s"$dir/t")
-    val side = Layout.writeBlooms(spark, s"$dir/t", "x")
-    // rewrite the table: new part files, MORE keys — the sidecar's file
-    // inventory no longer matches, so it must be ignored (else key 2000
-    // would be wrongly pruned away)
+    Sidecars.declare(spark, s"$dir/t", Seq(Sidecars.Bloom("x")))
+    // rewrite the table behind the sidecar's back: new part files, MORE
+    // keys — the sidecar's file inventory no longer matches, so it must
+    // be ignored (else key 2000 would be wrongly pruned away)
     mk(4096L).repartition(4).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/t")
     val (pruned, _, _) = Layout.bloomPrunedRead(spark, s"$dir/t", "x",
-      Seq(2000L), sidecarPath = Some(side))
+      Seq(2000L))
     assert(pruned.filter($"x" === 2000L).count() == 1L,
       "stale sidecar must not prune rows the rewritten table contains")
     graft.sink.StageWriter.deleteRecursively(java.nio.file.Paths.get(dir))

@@ -66,15 +66,11 @@ class MergeTargetedSpec extends AnyFunSuite {
     writeBase(path)
     StageWriter.mergeInto(spark, Seq((1L, "a")).toDF("k", "v"), path,
       Seq("k"))
-    val sidecar = Paths.get(path + ".__stats__")
-    assert(Files.exists(sidecar), "targeted merge must persist file stats")
-    val names1 = Files.readAllLines(sidecar)
-    import scala.jdk.CollectionConverters._
-    val lines1 = names1.asScala.filter(_.nonEmpty)
-    assert(lines1.head == "#column\tk",
+    val planes = Sidecars.load(path)
+    assert(planes.isDefined, "targeted merge must persist file stats")
+    assert(planes.get.declared == Seq(Sidecars.Stats("k")),
       "sidecar must record which column its stats describe")
-    val listed1 = lines1.tail.map(_.split("\t")(0)).toSet
-    assert(listed1 == inventory(path).keySet,
+    assert(planes.get.files == inventory(path).keySet,
       "sidecar inventory must match the directory")
     // second merge touches only the m1 file (key 1 now lives there)
     val snap = inventory(path)
@@ -198,14 +194,9 @@ class MergeTargetedSpec extends AnyFunSuite {
     (0 until 10).foreach(i => assert(got(f"k$i%06d") == s"u$i"))
     assert(got("zz_beyond") == "ins" && got("k000500") == "v500")
     // sidecar: string dialect, inventory-exact, reused by the next merge
-    assert(StageWriter.statsColumn(path).contains("k"))
-    assert(StageWriter.loadStatsStr(path,
-      StageWriter.listDataFiles(Paths.get(path)), "k").isDefined,
-      "string sidecar must validate against the directory inventory")
-    // the long-dialect loader must REJECT a string sidecar (StatsFilePrune
-    // stands down instead of comparing strings as longs)
-    assert(StageWriter.loadStats(path,
-      StageWriter.listDataFiles(Paths.get(path)), "k").isEmpty)
+    assert(Sidecars.load(path).flatMap(_.bounds("k")).map(_._1)
+      .contains("string"),
+      "string bounds must validate against the directory inventory")
     val snap = inventory(path)
     StageWriter.mergeInto(spark,
       Seq(("k000001", "b")).toDF("k", "v"), path, Seq("k"))

@@ -45,7 +45,7 @@ class MetadataAggSpec extends AnyFunSuite {
       spark.range(0, 90).select(col("id").as("k"),
           when(col("id") < 10, "a small").otherwise("b").as("g"))
         .write.partitionBy("g").parquet(p)
-      MetadataAgg.writeCounts(p)
+      Sidecars.declare(spark, p, Seq(Sidecars.Counts))
       val parts = MetadataAgg.partitionCounts(p).get
       assert(parts == Map("g=a small" -> 10L, "g=b" -> 80L),
         s"got $parts")
@@ -140,10 +140,8 @@ class MetadataAggSpec extends AnyFunSuite {
         Sidecars.declare(spark, part, Seq(Sidecars.Ndv("k", k = 64)))
       }
       intercept[IllegalArgumentException] {
-        MetadataAgg.writeNdv(spark, part, "k", 64)
-      }
-      intercept[IllegalArgumentException] {
-        MetadataAgg.writeKmh(spark, part, "k", "k", "g", 64)
+        Sidecars.declare(spark, part,
+          Seq(Sidecars.Kmh("k", "k", "g", k = 64)))
       }
       // read-time stand-down: a flat table grows a partition directory
       // AFTER the plane was built — root inventory goes empty, but the
@@ -172,12 +170,20 @@ class MetadataAggSpec extends AnyFunSuite {
         .repartition(3).write.parquet(p)
       val files = StageWriter.listDataFiles(tmp.resolve("t"))
       assert(files.size == 3)
+      // a counts plane over files 0 and 1 only (file 2 set aside), made
+      // stale by a foreign copy — so the upkeep below must rebuild
+      val aside = tmp.resolve("aside.parquet")
+      Files.move(files(2), aside)
+      Sidecars.declare(spark, p, Seq(Sidecars.Counts))
+      val foreign = files(1).getParent.resolve("zz_foreign.parquet")
+      Files.copy(files(1), foreign)
+      Files.move(aside, files(2))
       // the targeted commit's post-reveal / pre-deletion state: file 0
-      // is logically replaced by file 2's content, file 0 STILL on
-      // disk, and no counts sidecar exists → the fallback rebuild must
-      // not bake file 0 in
+      // is logically replaced by (newly revealed) file 2, file 0 STILL
+      // on disk → the fallback rebuild must not bake file 0 in
       val removedName = files.head.getFileName.toString
-      MetadataAgg.maintainCountsAfterRewrite(p,
+      Sidecars.afterTargetedRewrite(spark, p,
+        Seq(files(0), files(1), foreign).map(_.getFileName.toString),
         Set(removedName), Seq(files(2)))
       // the commit completes its drop
       Files.delete(files.head)
@@ -196,18 +202,16 @@ class MetadataAggSpec extends AnyFunSuite {
       spark.range(0, 4000).select(col("id").as("k"),
           (col("id") % 5).as("part"))
         .repartition(16).write.parquet(p)
-      MetadataAgg.writeCounts(p) // serial reference
-      val sidecar = java.nio.file.Paths.get(p + ".__counts__")
-      val serialBytes = Files.readAllBytes(sidecar)
-      Files.delete(sidecar)
+      Sidecars.declare(spark, p, Seq(Sidecars.Counts)) // serial reference
+      val serial = MetadataAgg.loadCounts(p).get
       val sc = spark.sparkContext
       sc.setJobGroup("dist_rebuild", "footer pass", false)
-      try MetadataAgg.writeCountsDistributed(spark, p,
-        MetadataAgg.listRel(tmp.resolve("t")))
-      finally sc.clearJobGroup()
-      assert(java.util.Arrays.equals(serialBytes,
-        Files.readAllBytes(sidecar)),
-        "distributed and serial rebuilds must write identical sidecars")
+      val distributed =
+        try MetadataAgg.distributedCounts(spark,
+          MetadataAgg.listRel(tmp.resolve("t")))
+        finally sc.clearJobGroup()
+      assert(distributed == serial,
+        "distributed and serial footer passes must agree")
       val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
       while (sc.statusTracker.getJobIdsForGroup("dist_rebuild").isEmpty &&
         System.nanoTime < deadline) Thread.sleep(5)
@@ -250,17 +254,21 @@ class MetadataAggSpec extends AnyFunSuite {
       spark.range(0, 10).select(col("id").as("k"),
           lit("a:b\tc,d e%").as("s"))
         .coalesce(1).write.parquet(weird)
-      MetadataAgg.writeHist(spark, weird, "s", 4)
+      Sidecars.declare(spark, weird, Seq(Sidecars.Hist("s", 4)))
       assert(MetadataAgg.countWhere(weird, "s", "a:b\tc,d e%")
         .contains(10L))
       // cardinality refusal
       intercept[IllegalArgumentException] {
-        MetadataAgg.writeHist(spark, p, "k", 16)
+        Sidecars.declare(spark, p, Seq(Sidecars.Hist("k", 16)))
       }
-      // a LOST sidecar rebuilds through the next targeted rewrite
+      // a STALE sidecar rebuilds through the next targeted rewrite
       // instead of leaving the plane dead (the counts-plane fallback
       // discipline, r14 review fix)
-      Files.delete(java.nio.file.Paths.get(p + ".__hist__"))
+      spark.range(99999, 100000).select(col("id").as("k"),
+          lit("s0").as("s"))
+        .coalesce(1).write.parquet(tmp.resolve("stray").toString)
+      Files.move(StageWriter.listDataFiles(tmp.resolve("stray")).head,
+        tmp.resolve("t").resolve("zz_stray.parquet"))
       assert(MetadataAgg.histCounts(p, "s").isEmpty)
       StageWriter.mergeInto(spark, spark.range(3100, 3150)
         .select(col("id").as("k"), lit("s1").as("s")), p, Seq("k"))

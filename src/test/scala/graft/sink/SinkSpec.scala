@@ -251,18 +251,23 @@ class SinkSpec extends AnyFunSuite {
       val path = tmp.resolve("t").toString
       spark.range(0, 1000).select(col("id").as("k"), (col("id") % 9).as("v"))
         .repartitionByRange(4, col("k")).write.parquet(path)
-      val files = StageWriter.listDataFiles(java.nio.file.Paths.get(path))
-      val foot = StageWriter.footerStats(files, "k")
+      val files = MetadataAgg.listRel(java.nio.file.Paths.get(path))
+      val plane = Sidecars.Bounds(Seq("k" -> "long"))
+      val foot = plane.footer(files)
       assert(foot.isDefined, "footer stats unavailable for a fresh write")
+      assert(foot.get == plane.scanBounds(spark, files,
+        Sidecars.schemaOf(spark, files.head._2)),
+        "footer and scan bounds must agree")
       // ranges partition 0..999 disjointly and cover every file
-      val got = foot.get.values.flatten.toSeq.sortBy(_._1)
+      val got = foot.get.values.flatMap(_.head)
+        .map { case (a, b) => (a.toLong, b.toLong) }.toSeq.sortBy(_._1)
       assert(got.head._1 == 0 && got.last._2 == 999)
       got.sliding(2).foreach { case Seq((_, aHi), (bLo, _)) =>
         assert(aHi < bLo, "footer ranges overlap")
       }
-      // a string column has no integral stats -> clean fallback signal
-      assert(StageWriter.footerStats(files, "missing").isEmpty ||
-        StageWriter.footerStats(files, "missing").get.values.forall(_.isEmpty))
+      // a column absent from the files has no values in any of them
+      assert(Sidecars.Bounds(Seq("missing" -> "long")).footer(files).get
+        .values.forall(_ == Seq(None)))
     } finally StageWriter.deleteRecursively(tmp)
   }
 }
